@@ -13,7 +13,7 @@ object Bench {
   /** Best-of-two seconds per declared query at one scale factor; -1.0 for
     * a query that failed on ANY run — a broken query must read as broken,
     * never as fast. Shared by the driver-contract main below and the
-    * per-sf scaling sweep (BenchSweep). */
+    * per-sf scaling sweep ([[BenchSweep]], at the end of this file). */
   def measure(spark: SparkSession, sfDir: String,
               only: Set[String] = Set.empty): Map[String, Double] = {
     // Warm the session (codegen, parquet footers, JIT) so the first timed
@@ -118,19 +118,6 @@ object Bench {
     } finally q.stop()
   }
 
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def jsonLine(results: Map[String, Double], sfDir: String,
                canarySec: Double = -1.0,
                schedCanarySec: Double = -1.0,
@@ -158,7 +145,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session("graft-bench")
+    val spark = Sessions.local("graft-bench")
     // the canary brackets the query window (one probe each side, the
     // recorded value their mean): a point probe at one end can miss a
     // load burst that inflated half the window — observed on this host,
@@ -206,7 +193,7 @@ object BenchSweep {
   def main(args: Array[String]): Unit = {
     val sfs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = Bench.session("graft-bench-sweep")
+    val spark = Sessions.local("graft-bench-sweep")
     val bySf = sfs.map(d => d -> Bench.measure(spark, d))
     bySf.foreach { case (d, r) => println(Bench.jsonLine(r, d)) }
     for (Seq((d0, r0), (d1, r1)) <- bySf.sliding(2)) {

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One place for the local-session knobs the runnable mains share
   * (thread count from SPARK_GRAFT_CPUS, shuffle partitions = cores — never
-  * the 200 default — UTC, no UI). Verify/Bench carry their own copies as
-  * part of the driver contract. */
+  * the 200 default — UTC, no UI). Verify and Bench build their sessions
+  * here too; ServeBench keeps its own builder for the FAIR scheduler. */
 object Sessions {
   def local(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

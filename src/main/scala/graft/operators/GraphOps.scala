@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorFunctions.{cosineSimPrenormed, dotProduct}
+import graft.sources.Maintenance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1223,25 +1224,15 @@ object GraphOps {
         // ITERATIONS stay sequential: the second delta re-reads the
         // edge store the first one rewrote.
         graft.operators.Par.run(Seq(
-          () => {
-            val out = current
-              .filter(col("sbucket").isin(touched: _*))
-              .join(broadcast(drop), Seq("src"), "left_anti")
-              .select(col("src"), col("dst"), col("sbucket"))
-              .unionByName(freshEdges.join(a1, Seq("src"))
-                .select(col("src"), col("dst"), col("sbucket")))
-              .repartition(col("sbucket"))
-              .localCheckpoint(eager = true) // cut lineage off the overwritten files
-            val written = out.select(col("sbucket")).distinct()
-              .collect().map(_.getInt(0)).toSet
-            out.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("sbucket").parquet(edgesPath)
-            touched.filterNot(written.contains).foreach { b =>
-              graft.sources.Maintenance.deleteRecursively(
-                root.resolve("edges").resolve(s"sbucket=$b"))
-            }
-          },
+          () =>
+            Maintenance.rewriteShards(edgesPath, Seq("sbucket"),
+              current
+                .filter(col("sbucket").isin(touched: _*))
+                .join(broadcast(drop), Seq("src"), "left_anti")
+                .select(col("src"), col("dst"), col("sbucket"))
+                .unionByName(freshEdges.join(a1, Seq("src"))
+                  .select(col("src"), col("dst"), col("sbucket"))),
+              touched.map(Seq(_))),
           () => {
             // reverse sidecar follows the edge store: every changed edge's
             // reverse row lives in its DST's bucket, so the rewrite is a
@@ -1255,36 +1246,25 @@ object GraphOps {
               .join(a1d, Seq("dst"))
               .select(col("dbucket")).distinct()
               .collect().map(_.getInt(0)).sorted.toIndexedSeq
-            if (revTouched.nonEmpty) {
-              val revOut = spark.read.parquet(revPath)
-                .filter(col("dbucket").isin(revTouched: _*))
-                .join(broadcast(drop), Seq("src"), "left_anti")
-                .select(col("dst"), col("src"), col("dbucket"))
-                .unionByName(freshEdges.join(a1d, Seq("dst"))
-                  .select(col("dst"), col("src"), col("dbucket")))
-                .repartition(col("dbucket"))
-                .localCheckpoint(eager = true)
-              val revWritten = revOut.select(col("dbucket")).distinct()
-                .collect().map(_.getInt(0)).toSet
-              revOut.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("dbucket").parquet(revPath)
-              revTouched.filterNot(revWritten.contains).foreach { b =>
-                graft.sources.Maintenance.deleteRecursively(
-                  root.resolve("redges").resolve(s"dbucket=$b"))
-              }
-            }
+            if (revTouched.nonEmpty)
+              Maintenance.rewriteShards(revPath, Seq("dbucket"),
+                spark.read.parquet(revPath)
+                  .filter(col("dbucket").isin(revTouched: _*))
+                  .join(broadcast(drop), Seq("src"), "left_anti")
+                  .select(col("dst"), col("src"), col("dbucket"))
+                  .unionByName(freshEdges.join(a1d, Seq("dst"))
+                    .select(col("dst"), col("src"), col("dbucket"))),
+                revTouched.map(Seq(_)))
           }),
           parallelism = 2)
       }
     }
     graft.operators.Par.run(Seq(
       () => deltas.foreach { case (drop, freshEdges) => applyDelta(drop, freshEdges) },
-      () => mem.coalesce(1).write.mode("overwrite")
-        .parquet(membersPath + ".staged")),
+      () => Maintenance.stageReplace(membersPath)(
+        mem.coalesce(1).write.mode("overwrite").parquet(_))),
       parallelism = 2)
-    graft.sources.Maintenance.deleteRecursively(root.resolve("members"))
-    Files.move(root.resolve("members.staged"), root.resolve("members"))
+    Maintenance.swapStaged(spark, membersPath)
     Files.writeString(marker, "")
   }
 

@@ -307,7 +307,7 @@ object IndexCatalog {
     * new locations would hide stale rows from later discovery. The next
     * maintenance call backfills from the rewritten data. */
   def dropKeymap(basePath: String, name: String): Unit =
-    deleteTree(keymapDir(basePath, name))
+    Maintenance.deleteRecursively(keymapDir(basePath, name))
 
   /** Backfill the keymap for an index built before it existed (or whose
     * backfill was killed mid-write) — ONE column-pruned scan of the
@@ -433,12 +433,8 @@ object IndexCatalog {
     val buckets = if (bks != null) bks else kbucketsOf(k, keyCol)
     if (buckets.isEmpty) return
     val merged = mergedKeymapShards(km, k, keyCol, locations, buckets)
-    if (mayEmpty)
-      dynamicOverwrite(keymapDir(basePath, name), Seq("kbucket"),
-        buckets.map(b => Seq[Any](b)).toArray, merged)
-    else
-      commitStagedKeymap(basePath, name,
-        merged.repartition(col("kbucket")).localCheckpoint(true))
+    Maintenance.rewriteShards(keymapDir(basePath, name).toString, Seq("kbucket"),
+      merged, if (mayEmpty) buckets.map(Seq(_)) else Nil)
   }
 
   /** The shard-merge frame both keymap write forms share: the `buckets`
@@ -466,25 +462,17 @@ object IndexCatalog {
     * binds only its WRITE, which must land strictly after the data
     * write). `keys`/`locations` must be pre-aligned to the keymap's
     * stored key type (the collected-locations path builds them from
-    * keymap rows, which already carry that type). */
+    * keymap rows, which already carry that type). Upsert-scoped only: an
+    * upsert's shards always keep ≥1 row per batch key, so no touched set
+    * (and no emptied-shard cleanup) is needed. */
   private def stageKeymapRewrite(spark: SparkSession, basePath: String,
                                  name: String, keys: DataFrame, keyCol: String,
                                  locations: DataFrame,
-                                 bks: Seq[Long]): DataFrame = {
+                                 bks: Seq[Long]): Maintenance.StagedShards = {
     val km = spark.read.parquet(keymapDir(basePath, name).toString)
-    mergedKeymapShards(km, alignKeys(keys, keyCol, km), keyCol, locations, bks)
-      .repartition(col("kbucket")).localCheckpoint(true)
+    Maintenance.stageShards(Seq("kbucket"),
+      mergedKeymapShards(km, alignKeys(keys, keyCol, km), keyCol, locations, bks))
   }
-
-  /** The write half: dynamic-overwrite the staged shards. Upsert-scoped
-    * (mayEmpty=false) writes only — an upsert's shards always keep ≥1
-    * row per batch key, so no emptied-shard cleanup is needed. */
-  private def commitStagedKeymap(basePath: String, name: String,
-                                 staged: DataFrame): Unit =
-    staged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kbucket")
-      .parquet(keymapDir(basePath, name).toString)
 
   /** Partition values of `locs` (stored strings) cast back to the
     * index's CURRENT column types — the literal probe values for the
@@ -655,7 +643,7 @@ object IndexCatalog {
       // reverse order would hide still-present rows from a replay's
       // discovery). Its COMPUTE half only reads keymap shards and the
       // materialized output, so it overlaps the data commit (§2.6).
-      var kmStaged: (DataFrame, Set[Seq[Any]]) = null
+      var kmStaged: Maintenance.StagedShards = null
       val kmDirPath = keymapDir(basePath, name)
       def stageKeymapCompaction(survivorsOut: Option[DataFrame]): Unit = {
         val locations = {
@@ -692,9 +680,11 @@ object IndexCatalog {
           else parts.reduce(_ unionByName _).distinct()
         }
         val km = spark.read.parquet(kmDirPath.toString)
-        kmStaged = materializeForOverwrite(Seq("kbucket"),
+        // deletes can empty a shard: the touched set makes the commit
+        // remove the emptied shard directories
+        kmStaged = Maintenance.stageShards(Seq("kbucket"),
           mergedKeymapShards(km, alignKeys(tsKeys, keyCol, km), keyCol,
-            locations, tsBks))
+            locations, tsBks), tsBks.map(Seq(_)))
       }
       if (touchedValues.nonEmpty) {
         val touchedPred = touchedValues.map { values =>
@@ -704,27 +694,17 @@ object IndexCatalog {
         }.reduce(_ || _)
         val scoped = idx.filter(touchedPred)
         val survivors = scoped.join(probe, hiddenCond(scoped), "left_anti")
-        val (out, written) = materializeForOverwrite(partitionCols, survivors)
+        val staged = Maintenance.stageShards(partitionCols, survivors, touchedValues)
         graft.operators.Par.run(Seq(
-          () => commitOverwrite(Paths.get(basePath, name, "data"),
-            partitionCols, touchedValues, out, written),
-          () => stageKeymapCompaction(if (versioned) Some(out) else None)),
+          () => Maintenance.commitShards(
+            Paths.get(basePath, name, "data").toString, staged),
+          () => stageKeymapCompaction(if (versioned) Some(staged.out) else None)),
           parallelism = 2)
       } else stageKeymapCompaction(None)
-      // mayEmpty semantics preserved: deletes can empty a shard, and the
-      // commitOverwrite path removes the emptied shard directories
-      commitOverwrite(kmDirPath, Seq("kbucket"),
-        tsBks.map(b => Seq[Any](b)).toArray, kmStaged._1, kmStaged._2)
+      Maintenance.commitShards(kmDirPath.toString, kmStaged)
     }
-    deleteTree(tombstoneDir(basePath, name))
+    Maintenance.deleteRecursively(tombstoneDir(basePath, name))
   }
-
-  private def deleteTree(dir: java.nio.file.Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally s.close()
-    }
 
   /** Top-K search against a cataloged index under ITS declared metric —
     * the reference stores the metric in the index descriptor
@@ -955,17 +935,17 @@ object IndexCatalog {
     // the merge's RESULT — so the merge's compute (the materialize half
     // of the dynamic overwrite, which touches no index file) overlaps
     // it; only the data COMMIT waits for both.
-    var outPair: (DataFrame, Set[Seq[Any]]) = null
+    var staged: Maintenance.StagedShards = null
     if (keysNeedA.nonEmpty)
       graft.operators.Par.run(Seq(
-        () => commitStagedKeymap(basePath, name,
+        () => Maintenance.commitShards(keymapDir(basePath, name).toString,
           stageKeymapRewrite(spark, basePath, name, keyDF(keysNeedA), keyCol,
             locDF(keysNeedA, k =>
               oldByKey.getOrElse(k, emptyLocs) ++ newByKey.getOrElse(k, emptyLocs)),
             bksLocal(keysNeedA))),
-        () => outPair = materializeForOverwrite(partitionCols, merged)),
+        () => staged = Maintenance.stageShards(partitionCols, merged, touchedValues)),
         parallelism = 2)
-    else outPair = materializeForOverwrite(partitionCols, merged)
+    else staged = Maintenance.stageShards(partitionCols, merged, touchedValues)
     // keymap phase C: compact the scoped keys' entries to their SURVIVING
     // locations (unversioned: the batch's locations, known driver-side;
     // versioned: from the materialized rewrite output — the stored row
@@ -975,15 +955,14 @@ object IndexCatalog {
     // which the next maintenance of these keys self-heals. Its COMPUTE
     // half reads only keymap shards and the materialized output, so it
     // overlaps the data commit (guide §2.6).
-    var stagedC: DataFrame = null
+    var stagedC: Maintenance.StagedShards = null
     graft.operators.Par.run(Seq(
-      () => commitOverwrite(Paths.get(basePath, name, "data"), partitionCols,
-        touchedValues, outPair._1, outPair._2),
+      () => Maintenance.commitShards(Paths.get(basePath, name, "data").toString, staged),
       () => if (keysNeedC.nonEmpty) {
         val cKeys = keyDF(keysNeedC)
         val cLocs = versionCol match {
           case None => locDF(keysNeedC, k => newByKey.getOrElse(k, emptyLocs))
-          case Some(_) => outPair._1
+          case Some(_) => staged.out
             .join(broadcast(cKeys.select(col(keyCol).cast(idxKeyT).as(keyCol))),
               Seq(keyCol), "left_semi")
             .select(col(keyCol) +:
@@ -994,65 +973,8 @@ object IndexCatalog {
           cLocs, bksLocal(keysNeedC))
       }),
       parallelism = 2)
-    if (stagedC != null) commitStagedKeymap(basePath, name, stagedC)
-  }
-
-  /** Dynamic partition overwrite of `target` with emptied-directory
-    * cleanup — shared by the data rewrite and the keymap shard rewrite. */
-  private def dynamicOverwrite(target: java.nio.file.Path,
-                               partitionCols: Seq[String],
-                               touchedValues: Array[Seq[Any]],
-                               merged: DataFrame): DataFrame = {
-    val (out, written) = materializeForOverwrite(partitionCols, merged)
-    commitOverwrite(target, partitionCols, touchedValues, out, written)
-  }
-
-  /** The compute half of [[dynamicOverwrite]]: materialize the rewrite
-    * output (lineage cut off the files about to be replaced) and collect
-    * its written partition values — no file under `target` is touched.
-    * Split out so [[upsertInto]] can overlap this (the merge's real
-    * compute) with the phase-A keymap write, which must land BEFORE the
-    * data write but does not depend on the merge's result. */
-  private def materializeForOverwrite(partitionCols: Seq[String],
-                                      merged: DataFrame): (DataFrame, Set[Seq[Any]]) = {
-    val out = merged
-      .repartition(partitionCols.map(col): _*)
-      .localCheckpoint(true)
-    val written = out.select(partitionCols.map(col): _*).distinct()
-      .collect().map(_.toSeq).toSet
-    (out, written)
-  }
-
-  /** The write half of [[dynamicOverwrite]]. */
-  private def commitOverwrite(target: java.nio.file.Path,
-                              partitionCols: Seq[String],
-                              touchedValues: Array[Seq[Any]],
-                              out: DataFrame,
-                              written: Set[Seq[Any]]): DataFrame = {
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(target.toString)
-    // Dynamic overwrite only rewrites partitions PRESENT in `out`. A
-    // touched partition whose every row was superseded (all its keys moved
-    // elsewhere, nothing new landed — or every row deleted) is absent from
-    // `out` and would keep its stale directory — delete those explicitly.
-    // Directory names use Spark's own Hive-escaping (a string label 'a:b'
-    // lives in 'label=a%3Ab'; null in the default-partition dir), so the
-    // cleanup finds exactly the directories the writer created.
-    val emptied = touchedValues.filterNot(written.contains)
-    emptied.foreach { values =>
-      val dir = partitionCols.zip(values)
-        .map { case (c, v) =>
-          if (v == null)
-            s"$c=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-          else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(c, String.valueOf(v))
-        }
-        .foldLeft(target)(_ resolve _)
-      deleteTree(dir)
-    }
-    out
+    if (stagedC != null)
+      Maintenance.commitShards(keymapDir(basePath, name).toString, stagedC)
   }
 
   /** Remove pending tombstones for `keys` (the upsert revival path). The

@@ -2108,7 +2108,8 @@ object InvertedIndex {
       val mergedStats = spark.read.parquet(layout.statsPath)
         .select((col("n") + d.getLong(0)).as("n"),
           (col("total_dl") + d.getLong(1)).as("total_dl"))
-      stagedSwap(mergedStats.coalesce(1), layout.statsPath)
+      Maintenance.publishReplace(spark, layout.statsPath)(
+        mergedStats.coalesce(1).write.mode("overwrite").parquet(_))
     })
     // lens follows the corpus: the batch's (doc_id, dl) rows append into
     // their dbucket shards (∝ batch), so a later DELETE of an upserted
@@ -2163,16 +2164,17 @@ object InvertedIndex {
     val touched = d.select(col("tbucket")).distinct()
       .as[Long].collect().sorted.toIndexedSeq
     if (touched.isEmpty) return
-    val merged = spark.read.parquet(layout.dictPath)
-      .filter(col("tbucket").isin(touched: _*))
-      .select(col("w"), col("df"))
-      .join(d.select(col("w"), col("ddf")), Seq("w"), "full_outer")
-      .select(col("w"),
-        (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L))).as("df"))
-      .filter(col("df") > 0L)
-      .withColumn("tbucket", bucketCol(col("w")))
-      .repartition(col("tbucket"))
-      .localCheckpoint(eager = true) // cut lineage off the overwritten files
+    val staged = Maintenance.stageShards(Seq("tbucket"),
+      spark.read.parquet(layout.dictPath)
+        .filter(col("tbucket").isin(touched: _*))
+        .select(col("w"), col("df"))
+        .join(d.select(col("w"), col("ddf")), Seq("w"), "full_outer")
+        .select(col("w"),
+          (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L))).as("df"))
+        .filter(col("df") > 0L)
+        .withColumn("tbucket", bucketCol(col("w"))),
+      touched.map(Seq(_)))
+    val merged = staged.out
     // the deletion-neighborhood sidecar needs the KEY-SET DELTA (terms
     // entering / leaving the dictionary), derivable only from the
     // PRE-merge slice — computed and pinned (two overlapped read-only
@@ -2210,17 +2212,7 @@ object InvertedIndex {
         d.select(col("w")).distinct().localCheckpoint(eager = true)
       else null
     val folds = Seq.newBuilder[() => Unit]
-    folds += (() => {
-      val written = merged.select(col("tbucket")).distinct()
-        .as[Long].collect().toSet
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tbucket").parquet(layout.dictPath)
-      touched.filterNot(written.contains).foreach { b =>
-        Maintenance.deleteRecursively(
-          Paths.get(layout.dictPath).resolve(s"tbucket=$b"))
-      }
-    })
+    folds += (() => Maintenance.commitShards(layout.dictPath, staged))
     // the lex sidecar follows the dict's KEY SET (word indexes): only the
     // delta terms can enter or leave the dictionary in this merge, so the
     // lex update reads and overwrites exactly their p2 partitions
@@ -2260,20 +2252,10 @@ object InvertedIndex {
     val deadDelta = delta.join(liveTouched, Seq("w"), "left_anti")
     val existing = spark.read.parquet(lexPath)
       .filter(col("p2").isin(touchedP2: _*)).select(col("w"))
-    val out = lexRowsOf(
-      existing.unionByName(aliveDelta).distinct()
-        .join(deadDelta, Seq("w"), "left_anti"))
-      .repartition(col("p2"))
-      .localCheckpoint(eager = true) // cut lineage off the overwritten files
-    val written = out.select(col("p2")).distinct().as[String].collect().toSet
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p2").parquet(lexPath)
-    touchedP2.filterNot(written.contains).foreach { p =>
-      val escaped = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(p)
-      Maintenance.deleteRecursively(Paths.get(lexPath).resolve(s"p2=$escaped"))
-    }
+    Maintenance.rewriteShards(lexPath, Seq("p2"),
+      lexRowsOf(existing.unionByName(aliveDelta).distinct()
+        .join(deadDelta, Seq("w"), "left_anti")),
+      touchedP2.map(Seq(_)))
   }
 
   /** TOUCHED-PARTITION reversed-term merge — [[mergeLexPartitions]]'
@@ -2294,20 +2276,10 @@ object InvertedIndex {
     val deadDelta = delta.join(liveTouched, Seq("w"), "left_anti")
     val existing = spark.read.parquet(revPath)
       .filter(col("r2").isin(touchedR2: _*)).select(col("w"))
-    val out = revRowsOf(
-      existing.unionByName(aliveDelta).distinct()
-        .join(deadDelta, Seq("w"), "left_anti"))
-      .repartition(col("r2"))
-      .localCheckpoint(eager = true) // cut lineage off the overwritten files
-    val written = out.select(col("r2")).distinct().as[String].collect().toSet
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("r2").parquet(revPath)
-    touchedR2.filterNot(written.contains).foreach { p =>
-      val escaped = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(p)
-      Maintenance.deleteRecursively(Paths.get(revPath).resolve(s"r2=$escaped"))
-    }
+    Maintenance.rewriteShards(revPath, Seq("r2"),
+      revRowsOf(existing.unionByName(aliveDelta).distinct()
+        .join(deadDelta, Seq("w"), "left_anti")),
+      touchedR2.map(Seq(_)))
   }
 
   /** Deletion-neighborhood maintenance — APPEND-DOMINANT, because the
@@ -2347,21 +2319,13 @@ object InvertedIndex {
         .localCheckpoint(eager = true)
       val touchedVb = deadRows.select(col("vbucket")).distinct()
         .as[Long].collect().sorted.toIndexedSeq
-      val out = spark.read.parquet(delPath)
-        .filter(col("vbucket").isin(touchedVb: _*))
-        .select(col("v"), col("w"))
-        .join(leavingTerms, Seq("w"), "left_anti")
-        .withColumn("vbucket", bucketCol(col("v")))
-        .repartition(col("vbucket"))
-        .localCheckpoint(eager = true) // cut lineage off the overwritten files
-      val written = out.select(col("vbucket")).distinct()
-        .as[Long].collect().toSet
-      out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("vbucket").parquet(delPath)
-      touchedVb.filterNot(written.contains).foreach { b =>
-        Maintenance.deleteRecursively(Paths.get(delPath).resolve(s"vbucket=$b"))
-      }
+      Maintenance.rewriteShards(delPath, Seq("vbucket"),
+        spark.read.parquet(delPath)
+          .filter(col("vbucket").isin(touchedVb: _*))
+          .select(col("v"), col("w"))
+          .join(leavingTerms, Seq("w"), "left_anti")
+          .withColumn("vbucket", bucketCol(col("v"))),
+        touchedVb.map(Seq(_)))
     }
   }
 
@@ -2369,66 +2333,46 @@ object InvertedIndex {
     * before it existed — one pass over the vocabulary-sized dict keys,
     * staged move (a killed backfill is invisible, re-derived next
     * call). */
-  private def ensureDictDel(spark: SparkSession, layout: Layout): Unit = {
-    val delPath = dictDelPathOf(layout)
-    if (!Files.exists(Paths.get(delPath))) {
-      val staged = delPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
+  private def ensureDictDel(spark: SparkSession, layout: Layout): Unit =
+    Maintenance.publishIfAbsent(dictDelPathOf(layout)) { staged =>
       delRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
         .withColumn("vbucket", bucketCol(col("v")))
         .repartition(col("vbucket"))
         .write.mode("overwrite").partitionBy("vbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(delPath))
     }
-  }
 
   /** Backfill the lex sidecar for a WORD index built before it existed —
     * one pass over the vocabulary-sized dict keys, staged move (a killed
     * backfill is invisible, re-derived next call). */
-  private def ensureDictLex(spark: SparkSession, layout: Layout): Unit = {
-    val lexPath = dictLexPathOf(layout)
-    if (!Files.exists(Paths.get(lexPath))) {
-      val staged = lexPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
+  private def ensureDictLex(spark: SparkSession, layout: Layout): Unit =
+    Maintenance.publishIfAbsent(dictLexPathOf(layout)) { staged =>
       lexRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
         .repartition(col("p2"))
         .write.mode("overwrite").partitionBy("p2").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(lexPath))
     }
-  }
 
   /** Backfill the reversed-term sidecar — the ensureDictLex discipline
     * on the reversed key. */
-  private def ensureDictRev(spark: SparkSession, layout: Layout): Unit = {
-    val revPath = dictRevPathOf(layout)
-    if (!Files.exists(Paths.get(revPath))) {
-      val staged = revPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
+  private def ensureDictRev(spark: SparkSession, layout: Layout): Unit =
+    Maintenance.publishIfAbsent(dictRevPathOf(layout)) { staged =>
       revRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
         .repartition(col("r2"))
         .write.mode("overwrite").partitionBy("r2").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(revPath))
     }
-  }
 
   /** Backfill the impact-bound sidecar for an index that predates it: one
     * column-pruned pass over the stored postings computes each term's
     * exact (tf_max, dl_min). Written through a staged move so a killed
     * backfill is invisible (re-derived next call). */
-  private def ensureImpacts(spark: SparkSession, layout: Layout): Unit = {
-    val impPath = impactsPathOf(layout)
-    if (!Files.exists(Paths.get(impPath))) {
-      val staged = impPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
+  private def ensureImpacts(spark: SparkSession, layout: Layout): Unit =
+    Maintenance.publishIfAbsent(impactsPathOf(layout)) { staged =>
       spark.read.parquet(layout.dataPath)
         .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
           min(col("dl")).as("dl_min"))
         .withColumn("tbucket", bucketCol(col("w")))
         .repartition(col("tbucket"))
         .write.mode("overwrite").partitionBy("tbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(impPath))
     }
-  }
 
   /** TOUCHED-BUCKET impact merge — [[mergeDictBuckets]]' discipline with
     * max/min combine: only the batch terms' tbucket partitions read,
@@ -2445,21 +2389,18 @@ object InvertedIndex {
     val touched = d.select(col("tbucket")).distinct()
       .as[Long].collect().sorted.toIndexedSeq
     if (touched.isEmpty) return
-    val merged = spark.read.parquet(impactsPathOf(layout))
-      .filter(col("tbucket").isin(touched: _*))
-      .select(col("w"), col("tf_max"), col("dl_min"))
-      .join(d.select(col("w"), col("btf"), col("bdl")), Seq("w"), "full_outer")
-      .select(col("w"),
-        greatest(coalesce(col("tf_max"), lit(0L)),
-          coalesce(col("btf"), lit(0L))).as("tf_max"),
-        least(coalesce(col("dl_min"), lit(Int.MaxValue)),
-          coalesce(col("bdl"), lit(Int.MaxValue))).as("dl_min"))
-      .withColumn("tbucket", bucketCol(col("w")))
-      .repartition(col("tbucket"))
-      .localCheckpoint(eager = true) // cut lineage off the overwritten files
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tbucket").parquet(impactsPathOf(layout))
+    // a full-outer max/min merge never empties a shard: no touched set
+    Maintenance.rewriteShards(impactsPathOf(layout), Seq("tbucket"),
+      spark.read.parquet(impactsPathOf(layout))
+        .filter(col("tbucket").isin(touched: _*))
+        .select(col("w"), col("tf_max"), col("dl_min"))
+        .join(d.select(col("w"), col("btf"), col("bdl")), Seq("w"), "full_outer")
+        .select(col("w"),
+          greatest(coalesce(col("tf_max"), lit(0L)),
+            coalesce(col("btf"), lit(0L))).as("tf_max"),
+          least(coalesce(col("dl_min"), lit(Int.MaxValue)),
+            coalesce(col("bdl"), lit(Int.MaxValue))).as("dl_min"))
+        .withColumn("tbucket", bucketCol(col("w"))))
   }
 
   /** Backfill the doc-length sidecar for an index built before it existed:
@@ -2468,19 +2409,14 @@ object InvertedIndex {
     * — every doc has ≥1 posting because even empty text tokenizes to a
     * single empty-string term). Written through a staged move so a killed
     * backfill is invisible (re-derived next call). */
-  private def ensureLens(spark: SparkSession, layout: Layout): Unit = {
-    val lensPath = lensPathOf(layout)
-    if (!Files.exists(Paths.get(lensPath))) {
-      val staged = lensPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
+  private def ensureLens(spark: SparkSession, layout: Layout): Unit =
+    Maintenance.publishIfAbsent(lensPathOf(layout)) { staged =>
       spark.read.parquet(layout.dataPath)
         .select(col("doc_id"), col("dl")).distinct()
         .withColumn("dbucket", dbucketCol(col("doc_id")))
         .repartition(col("dbucket"))
         .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(lensPath))
     }
-  }
 
   /** The lens rows for a batch of doc ids, pruned to the ids' dbucket
     * shards — the delete path's discovery read (∝ batch, never the
@@ -2498,19 +2434,14 @@ object InvertedIndex {
     * exact map — the full-store discovery cost, paid ONCE instead of on
     * every vacuum. Written through a staged move so a killed backfill is
     * invisible (re-derived next call). */
-  private def ensureFootprint(spark: SparkSession, layout: Layout): Unit = {
-    val footPath = footprintPathOf(layout)
-    if (!Files.exists(Paths.get(footPath))) {
-      val staged = footPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(staged))
+  private def ensureFootprint(spark: SparkSession, layout: Layout): Unit =
+    Maintenance.publishIfAbsent(footprintPathOf(layout)) { staged =>
       spark.read.parquet(layout.dataPath)
         .select(col("doc_id"), col("tbucket").cast("long").as("tbucket")).distinct()
         .withColumn("dbucket", dbucketCol(col("doc_id")))
         .repartition(col("dbucket"))
         .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
-      Files.move(Paths.get(staged), Paths.get(footPath))
     }
-  }
 
   /** Incremental DOCUMENT DELETE — the lexical twin of
     * [[IndexCatalog.tombstone]], completing the maintenance symmetry
@@ -2562,7 +2493,8 @@ object InvertedIndex {
           val mergedStats = spark.read.parquet(layout.statsPath)
             .select((col("n") - d.getLong(0)).as("n"),
               (col("total_dl") - d.getLong(1)).as("total_dl"))
-          stagedSwap(mergedStats.coalesce(1), layout.statsPath)
+          Maintenance.publishReplace(spark, layout.statsPath)(
+            mergedStats.coalesce(1).write.mode("overwrite").parquet(_))
         },
         () => fresh.select(col("doc_id")).coalesce(1)
           .write.mode("append").parquet(tombDir.toString)),
@@ -2604,23 +2536,14 @@ object InvertedIndex {
       .select(col("tbucket")).distinct()
       .as[Long].collect().sorted.toIndexedSeq
     if (touched.isEmpty) return
-    val freshImp = spark.read.parquet(layout.dataPath)
-      .filter(col("tbucket").isin(touched: _*))
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-        min(col("dl")).as("dl_min"))
-      .withColumn("tbucket", bucketCol(col("w")))
-      .repartition(col("tbucket"))
-      .localCheckpoint(eager = true)
-    val written = freshImp.select(col("tbucket")).distinct()
-      .as[Long].collect().toSet
-    freshImp.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tbucket").parquet(impactsPathOf(layout))
-    touched.filterNot(written.contains).foreach { b =>
-      Maintenance.deleteRecursively(
-        Paths.get(impactsPathOf(layout)).resolve(s"tbucket=$b"))
-    }
+    Maintenance.rewriteShards(impactsPathOf(layout), Seq("tbucket"),
+      spark.read.parquet(layout.dataPath)
+        .filter(col("tbucket").isin(touched: _*))
+        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
+        .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
+          min(col("dl")).as("dl_min"))
+        .withColumn("tbucket", bucketCol(col("w"))),
+      touched.map(Seq(_)))
   }
 
   /** Fold pending tombstones into the physical layout — the lexical
@@ -2682,45 +2605,25 @@ object InvertedIndex {
     // dir is deleted only after every fold has finished.
     val folds = Seq.newBuilder[() => Unit]
     if (touched.nonEmpty) {
+      val touchedShards = touched.map(Seq(_))
       folds += (() => {
-        val survivors = post.filter(col("tbucket").isin(touched: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("tbucket"))
-          .localCheckpoint(eager = true) // cut lineage off the files being overwritten
-        val written = survivors.select(col("tbucket")).distinct().as[Long].collect().toSet
-        survivors.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tbucket").parquet(layout.dataPath)
-        // dynamic overwrite skips partitions absent from the output — a
-        // bucket whose every posting died keeps its stale directory unless
-        // removed explicitly
-        touched.filterNot(written.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(layout.dataPath).resolve(s"tbucket=$b"))
-        }
+        Maintenance.rewriteShards(layout.dataPath, Seq("tbucket"),
+          post.filter(col("tbucket").isin(touched: _*))
+            .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
+          touchedShards)
         // impact bounds: deletes left them valid-but-stale; refresh the
         // touched buckets EXACTLY from the surviving postings (the
         // per-segment-static impact discipline — recompute at compaction).
         // A pre-sidecar index skips this: its eventual backfill reads the
         // already-vacuumed postings, which is the same exact state.
-        if (Files.exists(Paths.get(impactsPathOf(layout)))) {
-          val freshImp = spark.read.parquet(layout.dataPath)
-            .filter(col("tbucket").isin(touched: _*))
-            .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-              min(col("dl")).as("dl_min"))
-            .withColumn("tbucket", bucketCol(col("w")))
-            .repartition(col("tbucket"))
-            .localCheckpoint(eager = true)
-          val writtenI = freshImp.select(col("tbucket")).distinct()
-            .as[Long].collect().toSet
-          freshImp.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tbucket").parquet(impactsPathOf(layout))
-          touched.filterNot(writtenI.contains).foreach { b =>
-            Maintenance.deleteRecursively(
-              Paths.get(impactsPathOf(layout)).resolve(s"tbucket=$b"))
-          }
-        }
+        if (Files.exists(Paths.get(impactsPathOf(layout))))
+          Maintenance.rewriteShards(impactsPathOf(layout), Seq("tbucket"),
+            spark.read.parquet(layout.dataPath)
+              .filter(col("tbucket").isin(touched: _*))
+              .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
+                min(col("dl")).as("dl_min"))
+              .withColumn("tbucket", bucketCol(col("w"))),
+            touchedShards)
       })
       // signed decrement through the touched-bucket merge: only the dead
       // terms' dict buckets rewrite; terms whose every doc died drop
@@ -2731,95 +2634,37 @@ object InvertedIndex {
       // SAME term buckets as their postings (one tokenizer, one hash), so
       // the footprint-derived touched set covers this fold too
       if (Files.exists(Paths.get(positionsPathOf(layout))))
-        folds += (() => {
-          val survPos = spark.read.parquet(positionsPathOf(layout))
-            .filter(col("tbucket").isin(touched: _*))
-            .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-            .repartition(col("tbucket"))
-            .localCheckpoint(eager = true)
-          val writtenP = survPos.select(col("tbucket")).distinct()
-            .as[Long].collect().toSet
-          survPos.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tbucket").parquet(positionsPathOf(layout))
-          touched.filterNot(writtenP.contains).foreach { b =>
-            Maintenance.deleteRecursively(
-              Paths.get(positionsPathOf(layout)).resolve(s"tbucket=$b"))
-          }
-        })
+        folds += (() =>
+          Maintenance.rewriteShards(positionsPathOf(layout), Seq("tbucket"),
+            spark.read.parquet(positionsPathOf(layout))
+              .filter(col("tbucket").isin(touched: _*))
+              .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
+            touchedShards))
     }
     if (dbuckets.nonEmpty) {
       // lens fold: the dead docs' rows drop from their dbucket shards —
       // the same touched-dbucket dynamic overwrite as the footprint fold
       // (the flat-store full rewrite this replaced was the last
       // corpus-proportional step in the delete lifecycle)
-      folds += (() => {
-        val survLens = spark.read.parquet(lensPathOf(layout))
-          .filter(col("dbucket").isin(dbuckets: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("dbucket"))
-          .localCheckpoint(eager = true)
-        val writtenL = survLens.select(col("dbucket")).distinct()
-          .as[Long].collect().toSet
-        survLens.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("dbucket").parquet(lensPathOf(layout))
-        dbuckets.filterNot(writtenL.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(lensPathOf(layout)).resolve(s"dbucket=$b"))
-        }
-      })
+      val dbucketShards = dbuckets.map(Seq(_))
+      def foldByDoc(path: String): () => Unit = () =>
+        Maintenance.rewriteShards(path, Seq("dbucket"),
+          spark.read.parquet(path)
+            .filter(col("dbucket").isin(dbuckets: _*))
+            .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
+          dbucketShards)
+      folds += foldByDoc(lensPathOf(layout))
       // norms fold (embed indexes): the dead docs' n2 rows drop from
       // their dbucket shards — the lens fold one sidecar over
       if (Files.exists(Paths.get(normsPathOf(layout))))
-        folds += (() => {
-          val survNorms = spark.read.parquet(normsPathOf(layout))
-            .filter(col("dbucket").isin(dbuckets: _*))
-            .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-            .repartition(col("dbucket"))
-            .localCheckpoint(eager = true)
-          val writtenN = survNorms.select(col("dbucket")).distinct()
-            .as[Long].collect().toSet
-          survNorms.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("dbucket").parquet(normsPathOf(layout))
-          dbuckets.filterNot(writtenN.contains).foreach { b =>
-            Maintenance.deleteRecursively(
-              Paths.get(normsPathOf(layout)).resolve(s"dbucket=$b"))
-          }
-        })
+        folds += foldByDoc(normsPathOf(layout))
       // footprint fold: the dead docs' rows drop from their dbucket
       // shards (dynamic overwrite of the batch's dbuckets; shards the
       // fold emptied removed explicitly — same discipline as postings)
-      folds += (() => {
-        val survFoot = spark.read.parquet(footPath)
-          .filter(col("dbucket").isin(dbuckets: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("dbucket"))
-          .localCheckpoint(eager = true)
-        val writtenD = survFoot.select(col("dbucket")).distinct()
-          .as[Long].collect().toSet
-        survFoot.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("dbucket").parquet(footPath)
-        dbuckets.filterNot(writtenD.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(footPath).resolve(s"dbucket=$b"))
-        }
-      })
+      folds += foldByDoc(footPath)
     }
     graft.operators.Par.run(folds.result(), parallelism = 6)
     Maintenance.deleteRecursively(tombDir)
-  }
-
-  /** Write `df` beside `destPath`, then swap directories — the reader
-    * never sees a half-written table and the writer never reads the path
-    * it is overwriting. */
-  private def stagedSwap(df: DataFrame, destPath: String): Unit = {
-    val tmp = destPath + ".staged"
-    df.write.mode("overwrite").parquet(tmp)
-    Maintenance.deleteRecursively(Paths.get(destPath))
-    Files.move(Paths.get(tmp), Paths.get(destPath))
   }
 
   /** REPAIR: re-derive every DERIVED store from the postings (the
@@ -2846,18 +2691,16 @@ object InvertedIndex {
     // jobs (Par, guide §2.6) in four chains whose internal order is the
     // real dependency structure: dict → its key-set sidecars (lex, del,
     // rev), lens → stats, footprint, impacts, norms. Each step stages
-    // inside its own ensure*/stagedSwap, unchanged.
+    // inside its own ensure* or replace publish, unchanged.
     val chains = Seq.newBuilder[() => Unit]
     chains += (() => {
       // dict: full overwrite from posting counts (the build's definition)
-      val dictStaged = layout.dictPath + ".staged"
-      Maintenance.deleteRecursively(Paths.get(dictStaged))
-      post.groupBy(col("w")).agg(count(lit(1)).as("df"))
-        .withColumn("tbucket", bucketCol(col("w")))
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(dictStaged)
-      Maintenance.deleteRecursively(Paths.get(layout.dictPath))
-      Files.move(Paths.get(dictStaged), Paths.get(layout.dictPath))
+      Maintenance.publishReplace(spark, layout.dictPath) { staged =>
+        post.groupBy(col("w")).agg(count(lit(1)).as("df"))
+          .withColumn("tbucket", bucketCol(col("w")))
+          .repartition(col("tbucket"))
+          .write.mode("overwrite").partitionBy("tbucket").parquet(staged)
+      }
       // lex + deletion-neighborhood (word indexes): pure functions of the
       // rebuilt dict's key set — drop + the backfill derivations (each
       // staged inside its ensure*)
@@ -2875,11 +2718,10 @@ object InvertedIndex {
       // build's rule) — the one derived-of-derived chain
       Maintenance.deleteRecursively(Paths.get(lensPathOf(layout)))
       ensureLens(spark, layout)
-      stagedSwap(
+      Maintenance.publishReplace(spark, layout.statsPath)(
         spark.read.parquet(lensPathOf(layout))
           .agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl"))
-          .coalesce(1),
-        layout.statsPath)
+          .coalesce(1).write.mode("overwrite").parquet(_))
     })
     chains += (() => {
       Maintenance.deleteRecursively(Paths.get(footprintPathOf(layout)))
@@ -2892,16 +2734,13 @@ object InvertedIndex {
     // norms (embed indexes): a pure per-doc function of the postings —
     // re-derive through the same staged move as the other sidecars
     if (Files.exists(Paths.get(normsPathOf(layout))))
-      chains += (() => {
-        val normsStaged = normsPathOf(layout) + ".staged"
-        Maintenance.deleteRecursively(Paths.get(normsStaged))
-        normsOf(post)
-          .withColumn("dbucket", dbucketCol(col("doc_id")))
-          .repartition(col("dbucket"))
-          .write.mode("overwrite").partitionBy("dbucket").parquet(normsStaged)
-        Maintenance.deleteRecursively(Paths.get(normsPathOf(layout)))
-        Files.move(Paths.get(normsStaged), Paths.get(normsPathOf(layout)))
-      })
+      chains += (() =>
+        Maintenance.publishReplace(spark, normsPathOf(layout)) { staged =>
+          normsOf(post)
+            .withColumn("dbucket", dbucketCol(col("doc_id")))
+            .repartition(col("dbucket"))
+            .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
+        })
     graft.operators.Par.run(chains.result(), parallelism = 5)
   }
 

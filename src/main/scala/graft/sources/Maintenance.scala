@@ -168,9 +168,6 @@ object Maintenance {
   private def recoverPartition(dir: Path): Unit =
     if (Files.exists(dir.resolve(ManifestName))) finishCompaction(dir)
 
-  /** Depth-first recursive delete with the walk stream closed (shared by
-    * every loser-cleanup / staging-discard site in graft). deleteIfExists
-    * tolerates a concurrent cleaner racing on the same loser directory. */
   /** Recursive file-tree copy (REPLACE_EXISTING, so a retry after a
     * partial copy overwrites instead of throwing) — the index-clone
     * primitive the lifecycle queries use to work on a private copy of a
@@ -186,6 +183,9 @@ object Maintenance {
     }
   }
 
+  /** Depth-first recursive delete with the walk stream closed (shared by
+    * every loser-cleanup / staging-discard site in graft). deleteIfExists
+    * tolerates a concurrent cleaner racing on the same loser directory. */
   private[graft] def deleteRecursively(p: Path): Unit = if (Files.exists(p)) {
     val s = Files.walk(p)
     val all = try {
@@ -195,6 +195,133 @@ object Maintenance {
       buf.toSeq
     } finally s.close()
     all.reverse.foreach(Files.deleteIfExists(_))
+  }
+
+  // ---- the store commit protocol -------------------------------------
+  // Every persisted store in graft is written through one of the two
+  // forms below: a SHARD REWRITE (dynamic partition overwrite of the
+  // touched shards of a partitioned store) or a STAGED PUBLISH (the
+  // whole store written beside its path, then moved into place). A
+  // shard rewrite writes at the store path itself, so Spark refreshes
+  // the cached plans over the store; a publish writes at the staging
+  // path, so its swap refreshes them explicitly.
+
+  /** A shard rewrite's compute half, ready to commit: `out` is the merged
+    * rows, hash-partitioned on `partitionCols` (one file per shard) and
+    * lineage-cut; `written` holds the partition values `out` covers,
+    * collected only when a `touched` set was given. */
+  private[graft] final case class StagedShards(out: DataFrame,
+                                               partitionCols: Seq[String],
+                                               touched: Seq[Seq[Any]],
+                                               written: Set[Seq[Any]])
+
+  /** The compute half of [[rewriteShards]]: materialize the rewrite
+    * output — a dynamic overwrite must never consume lineage over the
+    * files it is replacing — and collect the partition values it writes.
+    * No file of the store is touched, so a caller can overlap this half
+    * with other work that must land before the commit.
+    *
+    * `touched` lists the shards (one value per partition column) the
+    * rewrite replaces. Pass it only when the merge can EMPTY a shard (a
+    * delete or a vacuum): the commit then removes each touched shard the
+    * output no longer covers. A merge that can never empty a shard
+    * passes none and skips the `written` collect job. */
+  private[graft] def stageShards(partitionCols: Seq[String], merged: DataFrame,
+                                 touched: Iterable[Seq[Any]] = Nil): StagedShards = {
+    val out = merged.repartition(partitionCols.map(col): _*)
+      .localCheckpoint(eager = true)
+    val written =
+      if (touched.isEmpty) Set.empty[Seq[Any]]
+      else out.select(partitionCols.map(col): _*).distinct()
+        .collect().map(_.toSeq).toSet
+    StagedShards(out, partitionCols, touched.toSeq, written)
+  }
+
+  /** The write half of [[rewriteShards]]: dynamic partition overwrite of
+    * `target` with `staged.out`, then removal of every touched shard the
+    * output does not cover — dynamic overwrite only replaces partitions
+    * PRESENT in the output, so a shard whose every row was removed would
+    * otherwise keep its stale directory. Directory names use Spark's own
+    * Hive escaping (a string label 'a:b' lives in 'label=a%3Ab'; null in
+    * the default-partition dir), so the cleanup finds exactly the
+    * directories the writer created. */
+  private[graft] def commitShards(target: String, staged: StagedShards): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    staged.out.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(staged.partitionCols: _*)
+      .parquet(target)
+    staged.touched.filterNot(staged.written.contains).foreach { values =>
+      val dir = staged.partitionCols.zip(values)
+        .map { case (c, v) =>
+          if (v == null) s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
+          else ExternalCatalogUtils.getPartitionPathString(c, String.valueOf(v))
+        }
+        .foldLeft(Paths.get(target))(_ resolve _)
+      deleteRecursively(dir)
+    }
+  }
+
+  /** Rewrite the touched shards of the partitioned store at `target` with
+    * `merged` — [[stageShards]] then [[commitShards]]; I/O ∝ the touched
+    * shards, never the store. */
+  private[graft] def rewriteShards(target: String, partitionCols: Seq[String],
+                                   merged: DataFrame,
+                                   touched: Iterable[Seq[Any]] = Nil): Unit =
+    commitShards(target, stageShards(partitionCols, merged, touched))
+
+  /** The one staging location of the store at `path`. */
+  private def stagingOf(path: String): Path = Paths.get(path + ".staged")
+
+  /** IF-ABSENT publish: when nothing is published at `path`, `write` the
+    * store into its staging location and move it into place. A killed
+    * publish leaves only staging, which the next attempt discards, so a
+    * reader never sees a partial store. Two concurrent first callers
+    * never interleave writes into the final path: the loser's move finds
+    * the store published and stands down, discarding its own staging. */
+  private[graft] def publishIfAbsent(path: String)(write: String => Unit): Unit = {
+    val dest = Paths.get(path)
+    if (Files.exists(dest)) return
+    val staged = stagingOf(path)
+    deleteRecursively(staged)
+    write(staged.toString)
+    try Files.move(staged, dest)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+           _: java.nio.file.DirectoryNotEmptyException => deleteRecursively(staged)
+    }
+  }
+
+  /** REPLACE publish: [[stageReplace]] then [[swapStaged]]. The writer
+    * never reads the path it is replacing. */
+  private[graft] def publishReplace(spark: SparkSession, path: String)
+                                   (write: String => Unit): Unit = {
+    stageReplace(path)(write)
+    swapStaged(spark, path)
+  }
+
+  /** The write half of a replace publish: `write` the new store into the
+    * staging location of `path`; the published store is untouched. */
+  private[graft] def stageReplace(path: String)(write: String => Unit): Unit = {
+    val staged = stagingOf(path)
+    deleteRecursively(staged)
+    write(staged.toString)
+  }
+
+  /** The swap half of a replace publish: delete the published store, then
+    * move the staged one into place. NOT atomic — between the delete and
+    * the move there is no store at `path`, and a reader listing it then
+    * fails (the torn-read window [[ServingCache.isTornRead]] classifies);
+    * a crash in that window leaves only the staged copy. Spark refreshes
+    * cached plans over a path only when Spark itself writes there, and
+    * this write went to staging, so the swap refreshes them: a frame
+    * persisted over the old store would otherwise keep serving its rows
+    * to every later read of `path` in the session, maintenance reads
+    * included. */
+  private[graft] def swapStaged(spark: SparkSession, path: String): Unit = {
+    deleteRecursively(Paths.get(path))
+    Files.move(stagingOf(path), Paths.get(path))
+    spark.catalog.refreshByPath(path)
   }
 
   /** IVF index REBUILD — the actuator that closes the q_ivf_drift

@@ -207,35 +207,17 @@ object MinhashIndex {
     // band fold and sig fold touch disjoint stores and both derive from
     // the checkpointed tomb/deadSigs frames — overlapped folds
     graft.operators.Par.run(Seq(
-      () => if (touched.nonEmpty) {
-        val bandStore = spark.read.parquet(layout.bandsPath)
-        val surv = bandStore.filter(col("bbucket").isin(touched: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("bbucket"))
-          .localCheckpoint(eager = true) // cut lineage off the overwritten files
-        val written = surv.select(col("bbucket")).distinct().as[Long].collect().toSet
-        surv.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bbucket").parquet(layout.bandsPath)
-        touched.filterNot(written.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(layout.bandsPath).resolve(s"bbucket=$b"))
-        }
-      },
-      () => {
-        val survSigs = sigStore.filter(col("sbucket").isin(sbuckets: _*))
-          .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-          .repartition(col("sbucket"))
-          .localCheckpoint(eager = true)
-        val writtenS = survSigs.select(col("sbucket")).distinct().as[Long].collect().toSet
-        survSigs.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("sbucket").parquet(layout.sigsPath)
-        sbuckets.filterNot(writtenS.contains).foreach { b =>
-          Maintenance.deleteRecursively(
-            Paths.get(layout.sigsPath).resolve(s"sbucket=$b"))
-        }
-      }),
+      () => if (touched.nonEmpty)
+        Maintenance.rewriteShards(layout.bandsPath, Seq("bbucket"),
+          spark.read.parquet(layout.bandsPath)
+            .filter(col("bbucket").isin(touched: _*))
+            .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
+          touched.map(Seq(_))),
+      () =>
+        Maintenance.rewriteShards(layout.sigsPath, Seq("sbucket"),
+          sigStore.filter(col("sbucket").isin(sbuckets: _*))
+            .join(broadcast(tomb), Seq("doc_id"), "left_anti"),
+          sbuckets.map(Seq(_)))),
       parallelism = 2)
   }
 
@@ -399,14 +381,12 @@ object MinhashIndex {
       WriterLease.withLease(leaseRoot(layout)) {
     val sigs = spark.read.parquet(layout.sigsPath)
       .select(col("doc_id"), col("sig"))
-    val staged = layout.bandsPath + ".staged"
-    Maintenance.deleteRecursively(Paths.get(staged))
-    Dedup.lshBands(sigs)
-      .withColumn("bbucket", bbucketCol(col("band_hash")))
-      .repartition(col("bbucket"))
-      .write.mode("overwrite").partitionBy("bbucket").parquet(staged)
-    Maintenance.deleteRecursively(Paths.get(layout.bandsPath))
-    Files.move(Paths.get(staged), Paths.get(layout.bandsPath))
+    Maintenance.publishReplace(spark, layout.bandsPath) { staged =>
+      Dedup.lshBands(sigs)
+        .withColumn("bbucket", bbucketCol(col("band_hash")))
+        .repartition(col("bbucket"))
+        .write.mode("overwrite").partitionBy("bbucket").parquet(staged)
+    }
   }
 
   /** Q-index-audit: the engine auditing its own index fleet — one query,

@@ -156,15 +156,6 @@ object ServingCache {
   def keymap(spark: SparkSession, basePath: String, name: String): DataFrame =
     frame(spark, Paths.get(basePath, name, "keymap"))
 
-  /** True when a failure chain bottoms out in a file deleted underneath
-    * a running plan — the torn-read window's signature (a dynamic
-    * overwrite replaced files between a request's plan-time snapshot and
-    * its execution). The recovery is ONE re-plan: the fresh read lists
-    * the current files, and a resident frame whose stamp moved rebuilds
-    * itself ([[frame]]'s swap). [[graft.sources.IndexCatalog.fetchByIdsServing]]
-    * retries its lookup this way; any serve caller racing live
-    * maintenance (the ServeBench churn cells) should wrap its action the
-    * same way. */
   /** Drop Spark's SHARED file-listing cache (the session-level
     * FileStatusCache behind every path-based parquet read). The round-18
     * churn adjudication caught the failure shape this exists for — on
@@ -183,6 +174,15 @@ object ServingCache {
     org.apache.spark.sql.execution.datasources.FileStatusCache
       .getOrCreate(spark).invalidateAll()
 
+  /** True when a failure chain bottoms out in a file deleted underneath
+    * a running plan — the torn-read window's signature (a dynamic
+    * overwrite, or a replace publish's delete-then-move, replaced files
+    * between a request's plan-time snapshot and its execution). The recovery is ONE re-plan: the fresh read lists
+    * the current files, and a resident frame whose stamp moved rebuilds
+    * itself ([[frame]]'s swap). [[graft.sources.IndexCatalog.fetchByIdsServing]]
+    * retries its lookup this way; any serve caller racing live
+    * maintenance (the ServeBench churn cells) should wrap its action the
+    * same way. */
   def isTornRead(t: Throwable): Boolean =
     t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
       t.isInstanceOf[java.nio.file.NoSuchFileException] ||

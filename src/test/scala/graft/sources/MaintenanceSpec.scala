@@ -106,6 +106,71 @@ class MaintenanceSpec extends SparkSpecBase with Matchers {
       .collect().map(_.toString).head).sorted
   }
 
+  test("shard rewrite removes emptied touched shards, keeps untouched ones byte-stable, escapes like Spark; publishes stage then move") {
+    import spark.implicits._
+    import java.nio.file.{Files => F, Paths => P}
+    def namesIn(d: java.nio.file.Path): Seq[String] = {
+      val s = F.list(d)
+      try {
+        val it = s.iterator()
+        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (it.hasNext) buf += it.next().getFileName.toString
+        buf.toSeq.sorted
+      } finally s.close()
+    }
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    val root = F.createTempDirectory("graft-shards")
+    val dir = root.resolve("t").toString
+    Seq[(Long, String)]((1L, "a:b"), (2L, "c:d"), (3L, null), (4L, "keep"))
+      .toDF("id", "label").write.partitionBy("label").parquet(dir)
+    val keepDir = P.get(dir, "label=keep")
+    val keepFiles = namesIn(keepDir)
+
+    // rewrite three touched shards: 'a:b' gets new rows, 'c:d' and the
+    // null shard are emptied — their Hive-escaped directories must go
+    val touched = Seq[Seq[Any]](Seq("a:b"), Seq("c:d"), Seq(null))
+    Maintenance.rewriteShards(dir, Seq("label"),
+      Seq((10L, "a:b"), (11L, "a:b")).toDF("id", "label"), touched)
+    namesIn(P.get(dir)).filter(_.startsWith("label=")) shouldBe
+      Seq("label=a%3Ab", "label=keep")
+    namesIn(keepDir) shouldBe keepFiles // untouched shard: same files
+    rows(dir) shouldBe Seq("[10,a:b]", "[11,a:b]", "[4,keep]")
+
+    // a merge that can never empty a shard passes no touched set; a
+    // written null and ':' label land in Spark's own escaped directories
+    Maintenance.rewriteShards(dir, Seq("label"),
+      Seq[(Long, String)]((12L, null), (13L, "e:f")).toDF("id", "label"))
+    namesIn(P.get(dir)).filter(_.startsWith("label=")) shouldBe Seq(
+      "label=__HIVE_DEFAULT_PARTITION__", "label=a%3Ab", "label=e%3Af", "label=keep")
+    namesIn(keepDir) shouldBe keepFiles
+    rows(dir) shouldBe
+      Seq("[10,a:b]", "[11,a:b]", "[12,null]", "[13,e:f]", "[4,keep]")
+
+    // if-absent publish, race lost: the winner's store lands while the
+    // loser is still writing its staging copy — the loser stands down,
+    // discards its staging, and the winner's store stays intact
+    val store = root.resolve("store").toString
+    Maintenance.publishIfAbsent(store) { staged =>
+      Seq(1L).toDF("id").write.parquet(staged)
+      Seq(2L).toDF("id").write.parquet(store) // the winner's publish
+    }
+    rows(store) shouldBe Seq("[2]")
+    namesIn(root).filter(_.startsWith("store")) shouldBe Seq("store")
+    // already published: the write never runs
+    Maintenance.publishIfAbsent(store)(_ => fail("published store rebuilt"))
+    rows(store) shouldBe Seq("[2]")
+
+    // replace publish: the new store is visible to the very next read of
+    // its path, also through a frame persisted over the old store
+    val pinned = spark.read.parquet(store).persist()
+    pinned.count() shouldBe 1L
+    Maintenance.publishReplace(spark, store)(Seq(3L, 4L).toDF("id").write.parquet(_))
+    rows(store) shouldBe Seq("[3]", "[4]")
+    namesIn(root).filter(_.startsWith("store")) shouldBe Seq("store")
+    pinned.unpersist()
+  }
+
   test("incremental aggregate refresh equals the flat aggregate over all history") {
     import org.apache.spark.sql.functions._
     val out = graft.operators.EventOps.incrAgg(spark, sfDir).collect()

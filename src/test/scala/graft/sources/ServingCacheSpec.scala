@@ -70,6 +70,21 @@ class ServingCacheSpec extends SparkSpecBase with Matchers {
       java.nio.file.Paths.get(layout.dictPath))
     ServingCache.frame(spark,
       java.nio.file.Paths.get(layout.dictPath)) should be theSameInstanceAs d1
+    // a full upsert → delete → vacuum cycle of fresh docs with NO read
+    // between the steps, while the first resident frames are still
+    // pinned: every store rewrite (the stats swaps included) must reach
+    // both the next serving request and the maintenance steps' own reads
+    // of the same stores, and adding then removing the same docs lands
+    // back on the pre-cycle scores exactly
+    val beforeCycle = hot()
+    val cycle = graft.Tables.documents(spark, sfDir)
+      .filter(col("doc_id") < 40)
+      .select((col("doc_id") + 900000L).as("doc_id"), col("text"))
+    InvertedIndex.upsertDocs(spark, layout, cycle)
+    InvertedIndex.deleteDocs(spark, layout, cycle.select(col("doc_id")))
+    InvertedIndex.vacuum(spark, layout)
+    hot() shouldBe cold()
+    hot() shouldBe beforeCycle
     // an upsert merges dict buckets (dynamic overwrite) and swaps stats:
     // both stamps move, so the NEXT serving request scores with the new
     // df/n/avgdl — never a TTL, never an explicit invalidation
