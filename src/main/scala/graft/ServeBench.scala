@@ -4,7 +4,6 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import graft.operators.{KnnSearch, TextOps, VectorOps}
 import graft.sources.{IndexCatalog, InvertedIndex}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CONCURRENT-SERVING benchmark — latency under N in-flight queries.
@@ -48,16 +47,7 @@ object ServeBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-serve-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-serve-bench")
 
     // ---- serving state, resolved once (publish-time moves) ------------
     val (vecBase, vecName, cent) = VectorOps.ensureIvfBucketed(spark, sfDir)

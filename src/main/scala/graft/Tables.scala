@@ -62,8 +62,8 @@ object Tables {
     *    double's 2^53 exact range, so this must never go through a float.
     *    The testdata carries only microsecond precision, so the
     *    truncation is lossless. SESSION REQUIREMENT: the conf must be set
-    *    AT SESSION CONSTRUCTION (Sessions.local — which Verify and Bench
-    *    use — ServeBench, and the test harness all do) — the reader itself no longer mutates the
+    *    AT SESSION CONSTRUCTION (Sessions.local — which Verify, Bench and
+    *    ServeBench use — and the test harness both do) — the reader itself no longer mutates the
     *    session (an observable side effect on user sessions, flagged in
     *    round 9); a user-supplied session without the conf fails loudly
     *    on a nanos-typed file with Spark's own illegal-type error, which

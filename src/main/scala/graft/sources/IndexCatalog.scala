@@ -1084,13 +1084,10 @@ object IndexCatalog {
         .join(broadcast(alignKeys(keys, keyCol, km)), Seq(keyCol), "left_semi")
       castLocations(locs, idx, partitionCols).distinct().collect().map(_.toSeq)
     }
-    def isFileGone(t: Throwable): Boolean =
-      t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-        isFileGone(t.getCause))
     val locValues =
       try lookup()
       catch {
-        case e: Throwable if isFileGone(e) =>
+        case e: Throwable if ServingCache.isTornRead(e) =>
           ServingCache.invalidate(basePath, name)
           // the re-plan must list FRESH files — a listing cached mid-
           // overwrite otherwise feeds the retry the same deleted file

@@ -69,8 +69,7 @@ object InvertedIndex {
     * reads prune to the batch ids' dbucket shards, vacuum folds only the
     * touched shards, and upsert appends ∝ batch into its shards.
     * Maintained at build, appended by upsert, folded by vacuum. */
-  private[sources] def lensPathOf(layout: Layout): String =
-    Paths.get(layout.dataPath).getParent.resolve("lens").toString
+  private[sources] def lensPathOf(layout: Layout): String = pathOf(layout, Lens)
 
   /** Doc-level tombstones (doc_id) — the Lucene deleted-docs discipline:
     * a delete writes ids here (batch-proportional metadata), the read
@@ -98,20 +97,21 @@ object InvertedIndex {
     * proportional), folded by vacuum (touched-dbucket dynamic
     * overwrite). The Lucene analog is the per-doc term-vector file. */
   private[sources] def footprintPathOf(layout: Layout): String =
-    Paths.get(layout.dataPath).getParent.resolve("footprint").toString
+    pathOf(layout, Footprint)
 
   /** Per-term IMPACT-BOUND sidecar — `impacts/tbucket=<b>/` rows of
     * (w, tf_max, dl_min), the Lucene per-segment max-impact metadata that
     * makes MaxScore/WAND-style top-k pruning possible ([[bm25MaxScore]]):
     * the BM25 tf-saturation part is monotone increasing in tf and
     * decreasing in dl, so impact(tf_max, dl_min) upper-bounds every
-    * posting's contribution UNDER ANY avgdl. Maintained at build, max/min-
-    * merged by upsert (exact for add-only), left VALID-but-stale by delete
-    * (an upper bound over a superset still bounds the subset), refreshed
-    * exactly for the touched buckets by vacuum — the per-segment-static
-    * impact discipline. */
+    * posting's contribution UNDER ANY avgdl. NOT written at build: the
+    * first upsert, MaxScore plan or audit backfills it from the stored
+    * postings. Max/min-merged by upsert (exact for add-only), left
+    * VALID-but-stale by delete (an upper bound over a superset still
+    * bounds the subset), refreshed exactly for the touched buckets by
+    * vacuum — the per-segment-static impact discipline. */
   private[sources] def impactsPathOf(layout: Layout): String =
-    Paths.get(layout.dataPath).getParent.resolve("impacts").toString
+    pathOf(layout, Impacts)
 
   private[sources] def hasParquet(dir: java.nio.file.Path): Boolean =
     Files.exists(dir) && {
@@ -163,9 +163,6 @@ object InvertedIndex {
     (tf.join(lens, "doc_id"), lens)
   }
 
-  private def postingsOf(docs: DataFrame): (DataFrame, DataFrame) =
-    postingsOfWith(docs, tokenizerOf("word"))
-
   /** Build the index if absent. */
   def ensure(spark: SparkSession, dir: String): Layout =
     ensureWith(spark, dir, IndexName, "word")
@@ -177,7 +174,8 @@ object InvertedIndex {
     * physical layout changes shape (v2: tbucket-partitioned dict; v3:
     * positional sidecar for word indexes; v4: dbucket-partitioned lens
     * sidecar; v5: prefix-partitioned dictlex sidecar for word indexes;
-    * v6: deletion-neighborhood dictdel sidecar for word indexes);
+    * v6: deletion-neighborhood dictdel sidecar for word indexes; v7:
+    * reversed-term dictrev sidecar for word indexes);
     * an older marker self-heals by rebuild, so a stale cache can never
     * feed new readers a layout they no longer parse. */
   private val DictFormatVersion = 7
@@ -201,7 +199,7 @@ object InvertedIndex {
     * The empty-string term (empty text tokenizes to one "" token) maps
     * to a sentinel partition so no partition value is empty/null. */
   private[sources] def dictLexPathOf(layout: Layout): String =
-    Paths.get(layout.dictPath).getParent.resolve("dictlex").toString
+    pathOf(layout, DictLex)
 
   private val LexEmptySentinel = "~empty~"
 
@@ -230,7 +228,7 @@ object InvertedIndex {
     * dictdel's append-dominant form — there is no fanout here), rebuilt
     * by [[rebuildDerived]], audited by rev_matches_dict. */
   private[sources] def dictRevPathOf(layout: Layout): String =
-    Paths.get(layout.dictPath).getParent.resolve("dictrev").toString
+    pathOf(layout, DictRev)
 
   private[sources] def revP2Col(w: org.apache.spark.sql.Column) =
     when(length(w) === 0, lit(LexEmptySentinel))
@@ -240,6 +238,12 @@ object InvertedIndex {
   private def revRowsOf(keys: DataFrame): DataFrame =
     keys.select(col("w"), reverse(col("w")).as("rw"),
       revP2Col(col("w")).as("r2"))
+
+  /** The index tree root — where the cross-process writer lease lives
+    * ([[WriterLease]]: every maintenance entry point below wraps itself
+    * in it; reads never take it). */
+  private def leaseRoot(layout: Layout): java.nio.file.Path =
+    Paths.get(layout.dataPath).getParent
 
   /** DELETION-NEIGHBORHOOD sidecar — `dictdel/vbucket=<b>/` rows of
     * (v, w) where v ranges over w's deletion variants at ≤[[MaxDeletes]]
@@ -262,14 +266,8 @@ object InvertedIndex {
     * del_matches_dict. Storage is the documented SymSpell trade:
     * ~Σ C(|w|, ≤2) ≈ |w|²/2 rows per term — vocabulary-scale metadata
     * (the Heaps budget), nowhere near posting-scale. */
-  /** The index tree root — where the cross-process writer lease lives
-    * ([[WriterLease]]: every maintenance entry point below wraps itself
-    * in it; reads never take it). */
-  private def leaseRoot(layout: Layout): java.nio.file.Path =
-    Paths.get(layout.dataPath).getParent
-
   private[sources] def dictDelPathOf(layout: Layout): String =
-    Paths.get(layout.dictPath).getParent.resolve("dictdel").toString
+    pathOf(layout, DictDel)
 
   /** The deletion depth the sidecar is built at — matches Lucene's
     * FuzzyQuery ceiling (maxEdits ≤ 2); a request above it falls back to
@@ -317,7 +315,7 @@ object InvertedIndex {
     * positions live in the same term buckets as its postings, so the
     * footprint-derived touched set covers both stores). */
   private[sources] def positionsPathOf(layout: Layout): String =
-    Paths.get(layout.dataPath).getParent.resolve("positions").toString
+    pathOf(layout, Positions)
 
   /** Per-doc SQUARED-NORM sidecar — `norms/dbucket=<b>/` rows of
     * (doc_id, n2 = Σ tf²), carried by EMBED-tokenized indexes only
@@ -330,7 +328,7 @@ object InvertedIndex {
     * compacted with the other append-only stores, re-derivable from
     * postings (repair). */
   private[sources] def normsPathOf(layout: Layout): String =
-    Paths.get(layout.dataPath).getParent.resolve("norms").toString
+    pathOf(layout, Norms)
 
   /** (doc_id, n2) for a batch's postings — the one aggregation build,
     * upsert, and repair share. */
@@ -345,6 +343,153 @@ object InvertedIndex {
       : DataFrame =
     docs.select(col("doc_id"), posexplode(tok(col("text"))).as(Seq("pos", "w")))
       .select(col("w"), col("doc_id"), col("pos").cast("long").as("pos"))
+
+  // ---- the store declarations -----------------------------------------
+  // Every store of the index is declared once below. Build, backfill,
+  // repair and compaction read the declarations; none of them names a
+  // store's directory, partition column or derivation itself.
+
+  /** What a derived store is computed from. At build, [[Postings]] and
+    * [[DocLens]] are the tokenizer's in-memory output; backfill and
+    * repair read every input from the stores ([[storedInput]]). `store`
+    * names the derived store an input reads, which repair rebuilds
+    * first. */
+  private[sources] sealed abstract class Input(val store: Option[String])
+  /** Postings rows (w, doc_id, tf, dl). */
+  private[sources] case object Postings extends Input(None)
+  /** The stored postings, tbucket included. */
+  private[sources] case object StoredPostings extends Input(None)
+  /** One (doc_id, dl) row per doc. */
+  private[sources] case object DocLens extends Input(Some("lens"))
+  /** The stored dict's keys (w). */
+  private[sources] case object DictKeys extends Input(Some("dict"))
+
+  /** The one function that derives a store's rows (partition column
+    * included) from its input. */
+  private[sources] final case class Derivation(from: Input,
+                                               rows: DataFrame => DataFrame)
+
+  /** One persisted store: its directory beside `data/`, its partition
+    * column (none for the one-row stats), the tokenizer kinds whose
+    * indexes carry it, and its derivation unless it is a primary store.
+    * `built = false` leaves the store to its first backfill; `appended`
+    * marks the stores maintenance appends to, which compaction folds. */
+  private[sources] final case class Store(dir: String, part: Option[String],
+                                          kinds: Set[String],
+                                          derivation: Option[Derivation] = None,
+                                          built: Boolean = true,
+                                          appended: Boolean = false)
+
+  private val AllKinds = Set("word", "gram3", "embed16")
+  private val WordOnly = Set("word")
+
+  private def byTerm(df: DataFrame): DataFrame =
+    df.withColumn("tbucket", bucketCol(col("w")))
+
+  private def byDoc(df: DataFrame): DataFrame =
+    df.withColumn("dbucket", dbucketCol(col("doc_id")))
+
+  private[sources] val Data = Store("data", Some("tbucket"), AllKinds,
+    appended = true)
+  private[sources] val Positions = Store("positions", Some("tbucket"), WordOnly,
+    appended = true)
+  // the SAME term hash as the postings: the touched-bucket merge
+  // discipline needs both stores on one key
+  private[sources] val Dict = Store("dict", Some("tbucket"), AllKinds,
+    Some(Derivation(Postings, p => byTerm(p.groupBy(col("w"))
+      .agg(count(lit(1)).as("df"))))))
+  private[sources] val DictLex = Store("dictlex", Some("p2"), WordOnly,
+    Some(Derivation(DictKeys, lexRowsOf)))
+  private[sources] val DictRev = Store("dictrev", Some("r2"), WordOnly,
+    Some(Derivation(DictKeys, revRowsOf)))
+  // variant-hash partitioned, so a fuzzy query reads only its own
+  // variants' buckets
+  private[sources] val DictDel = Store("dictdel", Some("vbucket"), WordOnly,
+    Some(Derivation(DictKeys, k =>
+      delRowsOf(k).withColumn("vbucket", bucketCol(col("v"))))),
+    appended = true)
+  private[sources] val Lens = Store("lens", Some("dbucket"), AllKinds,
+    Some(Derivation(DocLens, byDoc)), appended = true)
+  // (n, total_dl), NOT (n, avgdl): the average is one double division
+  // away, and storing the EXACT integer total is what lets an upsert
+  // update the stats incrementally without FP drift (n·avgdl does not
+  // round-trip to the exact token total)
+  private[sources] val Stats = Store("stats", None, AllKinds,
+    Some(Derivation(DocLens, l =>
+      l.agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl")))))
+  // tbucket cast long: the partition-inferred int must match the upsert
+  // append path, which derives it as a long hash
+  private[sources] val Footprint = Store("footprint", Some("dbucket"), AllKinds,
+    Some(Derivation(StoredPostings, p => byDoc(p.select(col("doc_id"),
+      col("tbucket").cast("long").as("tbucket")).distinct()))),
+    appended = true)
+  private[sources] val Impacts = Store("impacts", Some("tbucket"), AllKinds,
+    Some(Derivation(StoredPostings, p => byTerm(p.groupBy(col("w"))
+      .agg(max(col("tf")).as("tf_max"), min(col("dl")).as("dl_min"))))),
+    built = false)
+  private[sources] val Norms = Store("norms", Some("dbucket"), Set("embed16"),
+    Some(Derivation(Postings, p => byDoc(normsOf(p)))), appended = true)
+
+  /** Every store: the primaries, then the derived stores in build order
+    * (a store reading another derived store comes after it). */
+  private val Stores = Seq(Data, Positions, Dict, DictLex, DictRev, DictDel,
+    Lens, Stats, Footprint, Impacts, Norms)
+  private val Derived = Stores.filter(_.derivation.isDefined)
+
+  private def pathOf(layout: Layout, s: Store): String =
+    leaseRoot(layout).resolve(s.dir).toString
+
+  /** Write `rows` as store `s` at `path`: one task, and so one file, per
+    * partition directory (the createIfAbsent small-files discipline). */
+  private def writeStore(s: Store, rows: DataFrame, path: String): Unit =
+    s.part match {
+      case Some(c) =>
+        rows.repartition(col(c)).write.mode("overwrite").partitionBy(c).parquet(path)
+      case None => rows.coalesce(1).write.mode("overwrite").parquet(path)
+    }
+
+  /** Append `rows` (partition column included) to store `s`: new part
+    * files in the touched partitions, which compaction later folds. */
+  private def appendStore(layout: Layout, s: Store, rows: DataFrame): Unit = {
+    val c = s.part.get
+    rows.repartition(col(c)).write.mode("append").partitionBy(c)
+      .parquet(pathOf(layout, s))
+  }
+
+  /** The rows of derived store `s` for the input rows `in`. */
+  private def derive(s: Store, in: DataFrame): DataFrame = s.derivation.get.rows(in)
+
+  /** Write derived store `s` at `path` from its input as `input` binds it. */
+  private def writeDerived(s: Store, input: Input => DataFrame)(path: String): Unit =
+    writeStore(s, derive(s, input(s.derivation.get.from)), path)
+
+  /** An input read from the stores — what backfill and repair derive
+    * from. A doc whose text yields no token (embed16 drops blank tokens)
+    * has a zero-length lens row and no posting, so the postings cannot
+    * show it: the stored zero-length rows of docs without postings are
+    * kept. */
+  private def storedInput(spark: SparkSession, layout: Layout, in: Input): DataFrame =
+    in match {
+      case Postings | StoredPostings => spark.read.parquet(layout.dataPath)
+      case DictKeys => spark.read.parquet(layout.dictPath).select(col("w"))
+      case DocLens =>
+        val post = spark.read.parquet(layout.dataPath)
+        val fromPostings = post.select(col("doc_id"), col("dl")).distinct()
+        if (!Files.exists(Paths.get(lensPathOf(layout)))) fromPostings
+        else fromPostings.unionByName(spark.read.parquet(lensPathOf(layout))
+          .filter(col("dl") === 0).select(col("doc_id"), col("dl"))
+          .join(post.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    }
+
+  /** BACKFILL: publish each of `stores` that is absent, derived from the
+    * stored inputs — the path for an index predating a sidecar, for the
+    * lazy impacts store, and for a store a crashed repair left missing.
+    * Staged move: a killed backfill is invisible and re-derived on the
+    * next call. */
+  private[sources] def backfill(spark: SparkSession, layout: Layout,
+                                stores: Store*): Unit =
+    stores.foreach(s => Maintenance.publishIfAbsent(pathOf(layout, s))(
+      writeDerived(s, storedInput(spark, layout, _))))
 
   /** The tokenizer REGISTRY: every feature extractor an index can be
     * built with, keyed by the name recorded in `_text_index.json`.
@@ -389,73 +534,21 @@ object InvertedIndex {
     }
     if (!Files.exists(markerOf(base, name))) {
       Files.createDirectories(Paths.get(base, name))
-      val (postings, lens) =
-        postingsOfWith(Tables.documents(spark, dir), tokenizerOf(tokKind))
-      // (n, total_dl), NOT (n, avgdl): the average is one double division
-      // away, and storing the EXACT integer total is what lets an upsert
-      // update the stats incrementally without FP drift (n·avgdl does not
-      // round-trip to the exact token total)
-      lens.agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl"))
-        .coalesce(1).write.mode("overwrite").parquet(layout.statsPath)
-      // dict partitioned by the SAME term hash as the postings — the
-      // touched-bucket merge discipline needs both stores on one key
-      postings.groupBy(col("w")).agg(count(lit(1)).as("df"))
-        .withColumn("tbucket", bucketCol(col("w")))
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(layout.dictPath)
-      // prefix-ordered lex sidecar (word indexes only — see dictLexPathOf)
-      if (tokKind == "word")
-        lexRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-          .repartition(col("p2"))
-          .write.mode("overwrite").partitionBy("p2")
-          .parquet(dictLexPathOf(layout))
-      // reversed-term sidecar (word indexes only — see dictRevPathOf)
-      if (tokKind == "word")
-        revRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-          .repartition(col("r2"))
-          .write.mode("overwrite").partitionBy("r2")
-          .parquet(dictRevPathOf(layout))
-      // deletion-neighborhood sidecar (word indexes only — see
-      // dictDelPathOf): variant-hash partitioned so a fuzzy query reads
-      // only its own variants' buckets
-      if (tokKind == "word")
-        delRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-          .withColumn("vbucket", bucketCol(col("v")))
-          .repartition(col("vbucket"))
-          .write.mode("overwrite").partitionBy("vbucket")
-          .parquet(dictDelPathOf(layout))
-      lens.withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(lensPathOf(layout))
-      postings
-        .withColumn("tbucket", bucketCol(col("w")))
-        // one task per bucket value → one file per partition directory
-        // (the createIfAbsent small-files discipline)
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(layout.dataPath)
-      // footprint sidecar: the doc→tbucket map delete-side discovery reads
-      // (tbucket cast long: the partition-inferred int must match the
-      // upsert append path, which derives it as a long hash)
-      spark.read.parquet(layout.dataPath)
-        .select(col("doc_id"), col("tbucket").cast("long").as("tbucket")).distinct()
-        .withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket")
-        .parquet(footprintPathOf(layout))
-      // positional sidecar (word indexes only — see positionsPathOf)
-      if (tokKind == "word")
-        positionsOf(Tables.documents(spark, dir), tokenizerOf(tokKind))
-          .withColumn("tbucket", bucketCol(col("w")))
-          .repartition(col("tbucket"))
-          .write.mode("overwrite").partitionBy("tbucket")
-          .parquet(positionsPathOf(layout))
-      // squared-norm sidecar (embed indexes only — see normsPathOf)
-      if (tokKind == "embed16")
-        normsOf(postings)
-          .withColumn("dbucket", dbucketCol(col("doc_id")))
-          .repartition(col("dbucket"))
-          .write.mode("overwrite").partitionBy("dbucket")
-          .parquet(normsPathOf(layout))
+      val tok = tokenizerOf(tokKind)
+      val (postings, lens) = postingsOfWith(Tables.documents(spark, dir), tok)
+      // the primaries first: footprint and the dict key-set sidecars
+      // derive from what is already stored
+      writeStore(Data, byTerm(postings), layout.dataPath)
+      if (Positions.kinds(tokKind))
+        writeStore(Positions, byTerm(positionsOf(Tables.documents(spark, dir), tok)),
+          pathOf(layout, Positions))
+      def input(in: Input): DataFrame = in match {
+        case Postings => postings
+        case DocLens => lens
+        case stored => storedInput(spark, layout, stored)
+      }
+      Derived.filter(s => s.built && s.kinds(tokKind))
+        .foreach(s => writeDerived(s, input)(pathOf(layout, s)))
       Files.writeString(markerOf(base, name),
         s"""{"name": "$name", "kind": "inverted", "buckets": $TermBuckets, """ +
           s""""tok": "$tokKind", "dictv": $DictFormatVersion}""")
@@ -621,7 +714,7 @@ object InvertedIndex {
       : (Seq[String], DataFrame) = {
     import spark.implicits._
     val buckets = bucketsOf(terms)
-    ensureImpacts(spark, layout)
+    backfill(spark, layout, Impacts)
     // serving mode: the ubs collect below consumes dict⋈impacts⋈stats —
     // three per-request metadata jobs over files; resident frames remove
     // the listing/footer/scan floor exactly as in [[bm25Over]]
@@ -1882,7 +1975,8 @@ object InvertedIndex {
     *  - dict_df_matches_postings: every term's dict df equals its stored
     *    posting count (and neither store has a term the other lacks);
     *  - lens_matches_postings: the lens sidecar holds exactly the
-    *    distinct (doc_id, dl) pairs the postings denormalize;
+    *    distinct (doc_id, dl) pairs the postings denormalize, plus
+    *    zero-length rows for docs without postings;
     *  - stats_match_lens: (n, total_dl) equal the lens aggregate;
     *  - footprint_matches_postings: the doc→tbucket sidecar mirrors the
     *    postings' distinct (doc_id, tbucket) pairs;
@@ -1896,9 +1990,7 @@ object InvertedIndex {
     * path's masking business and do not violate any of these. */
   private[graft] def auditFrame(spark: SparkSession, layout: Layout,
                                 artifact: String = "inverted"): DataFrame = {
-    ensureLens(spark, layout)
-    ensureFootprint(spark, layout)
-    ensureImpacts(spark, layout)
+    backfill(spark, layout, Lens, Footprint, Impacts)
     val post = spark.read.parquet(layout.dataPath)
     def row(inv: String, violations: org.apache.spark.sql.Column,
             from: DataFrame): DataFrame =
@@ -1911,13 +2003,19 @@ object InvertedIndex {
     val d1 = row("dict_df_matches_postings",
       sum(when(col("adf").isNull || col("df").isNull ||
         col("adf") =!= col("df"), 1L).otherwise(0L)), dictCmp)
-    val lensCmp = post.select(col("doc_id"), col("dl")).distinct()
-      .withColumn("p", lit(1))
+    // a zero-length lens row is healthy only for a doc without postings
+    // (its text yielded no token), which the postings cannot show
+    val postLens = post.select(col("doc_id"), col("dl")).distinct()
+    val lensCmp = postLens.withColumn("p", lit(1))
       .join(spark.read.parquet(lensPathOf(layout))
           .select(col("doc_id"), col("dl")).withColumn("l", lit(1)),
         Seq("doc_id", "dl"), "full_outer")
+      .join(postLens.select(col("doc_id"), lit(1).as("posted")).distinct(),
+        Seq("doc_id"), "left")
     val d2 = row("lens_matches_postings",
-      sum(when(col("p").isNull || col("l").isNull, 1L).otherwise(0L)), lensCmp)
+      sum(when(col("l").isNull || (col("p").isNull &&
+        (col("dl") =!= 0 || col("posted").isNotNull)), 1L).otherwise(0L)),
+      lensCmp)
     val statsCmp = spark.read.parquet(lensPathOf(layout))
       .agg(count(lit(1)).as("cn"), sum(col("dl")).as("cdl"))
       .crossJoin(spark.read.parquet(layout.statsPath))
@@ -2065,8 +2163,7 @@ object InvertedIndex {
     // backfill BEFORE the posting append: a pre-sidecar index derives its
     // lens (and impact bounds) from the stored postings, which must not
     // yet include this batch
-    ensureLens(spark, layout)
-    ensureImpacts(spark, layout)
+    backfill(spark, layout, Lens, Impacts)
     val (postings, lens0) = postingsOfWith(docs, tokenizerOf(tokKindOf(layout)))
     // the two batch pins tokenize independently (lens is a subframe of
     // the postings plan, so each checkpoint runs its own pass) — the
@@ -2090,19 +2187,14 @@ object InvertedIndex {
     // the streaming path replays the whole batch by marker, and the
     // audit/repair family is the named backstop for direct callers.
     val tasks = Seq.newBuilder[() => Unit]
-    tasks += (() =>
-      newPost.repartition(col("tbucket"))
-        .write.mode("append").partitionBy("tbucket").parquet(layout.dataPath))
+    tasks += (() => appendStore(layout, Data, newPost))
     tasks += (() =>
       mergeDictBuckets(spark, layout,
         newPost.groupBy(col("w")).agg(count(lit(1)).as("ddf"))))
     // impact bounds: max/min-merge of the batch's per-term extremes into
     // the touched buckets — EXACT for add-only maintenance (the max of two
     // true maxima is the true maximum of the union)
-    tasks += (() =>
-      mergeImpactBuckets(spark, layout,
-        newPost.groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-          min(col("dl")).as("dl_min"))))
+    tasks += (() => mergeImpactBuckets(spark, layout, derive(Impacts, newPost)))
     tasks += (() => {
       val d = lens.agg(count(lit(1)).as("dn"), sum(col("dl")).as("ddl")).head()
       val mergedStats = spark.read.parquet(layout.statsPath)
@@ -2114,35 +2206,21 @@ object InvertedIndex {
     // lens follows the corpus: the batch's (doc_id, dl) rows append into
     // their dbucket shards (∝ batch), so a later DELETE of an upserted
     // doc finds its length in a pruned read
-    tasks += (() =>
-      lens.withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("append").partitionBy("dbucket").parquet(lensPathOf(layout)))
+    tasks += (() => appendStore(layout, Lens, derive(Lens, lens)))
     // footprint follows too: new doc_ids append their (doc_id, tbucket)
     // pairs into their dbucket shards — delete-side discovery stays
     // batch-proportional for docs added after the build
-    tasks += (() =>
-      newPost.select(col("doc_id"), col("tbucket")).distinct()
-        .withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("append").partitionBy("dbucket").parquet(footprintPathOf(layout)))
+    tasks += (() => appendStore(layout, Footprint, derive(Footprint, newPost)))
     // positional sidecar follows (word indexes carry it from build):
     // pure append of the batch's occurrence stream — I/O ∝ batch
     if (Files.exists(Paths.get(positionsPathOf(layout))))
-      tasks += (() =>
-        positionsOf(docs, tokenizerOf(tokKindOf(layout)))
-          .withColumn("tbucket", bucketCol(col("w")))
-          .repartition(col("tbucket"))
-          .write.mode("append").partitionBy("tbucket").parquet(positionsPathOf(layout)))
+      tasks += (() => appendStore(layout, Positions,
+        byTerm(positionsOf(docs, tokenizerOf(tokKindOf(layout))))))
     // squared-norm sidecar follows (embed indexes carry it from build):
     // a NEW doc's n2 is a pure per-doc aggregate of its own batch
     // postings — append ∝ batch into the batch ids' dbucket shards
     if (Files.exists(Paths.get(normsPathOf(layout))))
-      tasks += (() =>
-        normsOf(newPost)
-          .withColumn("dbucket", dbucketCol(col("doc_id")))
-          .repartition(col("dbucket"))
-          .write.mode("append").partitionBy("dbucket").parquet(normsPathOf(layout)))
+      tasks += (() => appendStore(layout, Norms, derive(Norms, newPost)))
     graft.operators.Par.run(tasks.result(), parallelism = 6)
   }
 
@@ -2309,14 +2387,9 @@ object InvertedIndex {
     import spark.implicits._
     val delPath = dictDelPathOf(layout)
     if (enteringTerms.limit(1).count() > 0)
-      delRowsOf(enteringTerms)
-        .withColumn("vbucket", bucketCol(col("v")))
-        .repartition(col("vbucket"))
-        .write.mode("append").partitionBy("vbucket").parquet(delPath)
+      appendStore(layout, DictDel, derive(DictDel, enteringTerms))
     if (leavingTerms.limit(1).count() > 0) {
-      val deadRows = delRowsOf(leavingTerms)
-        .withColumn("vbucket", bucketCol(col("v")))
-        .localCheckpoint(eager = true)
+      val deadRows = derive(DictDel, leavingTerms).localCheckpoint(eager = true)
       val touchedVb = deadRows.select(col("vbucket")).distinct()
         .as[Long].collect().sorted.toIndexedSeq
       Maintenance.rewriteShards(delPath, Seq("vbucket"),
@@ -2328,51 +2401,6 @@ object InvertedIndex {
         touchedVb.map(Seq(_)))
     }
   }
-
-  /** Backfill the deletion-neighborhood sidecar for a WORD index built
-    * before it existed — one pass over the vocabulary-sized dict keys,
-    * staged move (a killed backfill is invisible, re-derived next
-    * call). */
-  private def ensureDictDel(spark: SparkSession, layout: Layout): Unit =
-    Maintenance.publishIfAbsent(dictDelPathOf(layout)) { staged =>
-      delRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-        .withColumn("vbucket", bucketCol(col("v")))
-        .repartition(col("vbucket"))
-        .write.mode("overwrite").partitionBy("vbucket").parquet(staged)
-    }
-
-  /** Backfill the lex sidecar for a WORD index built before it existed —
-    * one pass over the vocabulary-sized dict keys, staged move (a killed
-    * backfill is invisible, re-derived next call). */
-  private def ensureDictLex(spark: SparkSession, layout: Layout): Unit =
-    Maintenance.publishIfAbsent(dictLexPathOf(layout)) { staged =>
-      lexRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-        .repartition(col("p2"))
-        .write.mode("overwrite").partitionBy("p2").parquet(staged)
-    }
-
-  /** Backfill the reversed-term sidecar — the ensureDictLex discipline
-    * on the reversed key. */
-  private def ensureDictRev(spark: SparkSession, layout: Layout): Unit =
-    Maintenance.publishIfAbsent(dictRevPathOf(layout)) { staged =>
-      revRowsOf(spark.read.parquet(layout.dictPath).select(col("w")))
-        .repartition(col("r2"))
-        .write.mode("overwrite").partitionBy("r2").parquet(staged)
-    }
-
-  /** Backfill the impact-bound sidecar for an index that predates it: one
-    * column-pruned pass over the stored postings computes each term's
-    * exact (tf_max, dl_min). Written through a staged move so a killed
-    * backfill is invisible (re-derived next call). */
-  private def ensureImpacts(spark: SparkSession, layout: Layout): Unit =
-    Maintenance.publishIfAbsent(impactsPathOf(layout)) { staged =>
-      spark.read.parquet(layout.dataPath)
-        .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-          min(col("dl")).as("dl_min"))
-        .withColumn("tbucket", bucketCol(col("w")))
-        .repartition(col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket").parquet(staged)
-    }
 
   /** TOUCHED-BUCKET impact merge — [[mergeDictBuckets]]' discipline with
     * max/min combine: only the batch terms' tbucket partitions read,
@@ -2403,21 +2431,6 @@ object InvertedIndex {
         .withColumn("tbucket", bucketCol(col("w"))))
   }
 
-  /** Backfill the doc-length sidecar for an index built before it existed:
-    * dl rides denormalized on every posting, so one column-pruned scan +
-    * distinct recovers the exact per-doc lengths (one-time, deterministic
-    * — every doc has ≥1 posting because even empty text tokenizes to a
-    * single empty-string term). Written through a staged move so a killed
-    * backfill is invisible (re-derived next call). */
-  private def ensureLens(spark: SparkSession, layout: Layout): Unit =
-    Maintenance.publishIfAbsent(lensPathOf(layout)) { staged =>
-      spark.read.parquet(layout.dataPath)
-        .select(col("doc_id"), col("dl")).distinct()
-        .withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
-    }
-
   /** The lens rows for a batch of doc ids, pruned to the ids' dbucket
     * shards — the delete path's discovery read (∝ batch, never the
     * corpus). `dbuckets` is the batch's precomputed shard set.
@@ -2428,20 +2441,6 @@ object InvertedIndex {
     spark.read.parquet(lensPathOf(layout))
       .filter(col("dbucket").isin(dbuckets: _*))
       .select(col("doc_id"), col("dl"))
-
-  /** Backfill the footprint sidecar for an index built before it
-    * existed: one column-pruned scan over (doc_id, tbucket) recovers the
-    * exact map — the full-store discovery cost, paid ONCE instead of on
-    * every vacuum. Written through a staged move so a killed backfill is
-    * invisible (re-derived next call). */
-  private def ensureFootprint(spark: SparkSession, layout: Layout): Unit =
-    Maintenance.publishIfAbsent(footprintPathOf(layout)) { staged =>
-      spark.read.parquet(layout.dataPath)
-        .select(col("doc_id"), col("tbucket").cast("long").as("tbucket")).distinct()
-        .withColumn("dbucket", dbucketCol(col("doc_id")))
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
-    }
 
   /** Incremental DOCUMENT DELETE — the lexical twin of
     * [[IndexCatalog.tombstone]], completing the maintenance symmetry
@@ -2468,7 +2467,7 @@ object InvertedIndex {
   def deleteDocs(spark: SparkSession, layout: Layout, ids: DataFrame): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
     ServingCache.dropStaleListings(spark) // fresh listings (see upsertDocs)
-    ensureLens(spark, layout)
+    backfill(spark, layout, Lens)
     val tombDir = tombDirOf(layout)
     val existing =
       if (hasParquet(tombDir)) spark.read.parquet(tombDir.toString)
@@ -2525,7 +2524,7 @@ object InvertedIndex {
     val tombDir = tombDirOf(layout)
     if (!hasParquet(tombDir)) return // add-only merges keep bounds exact
     if (!Files.exists(Paths.get(impactsPathOf(layout)))) return
-    ensureFootprint(spark, layout)
+    backfill(spark, layout, Footprint)
     val tomb = spark.read.parquet(tombDir.toString).select(col("doc_id"))
       .localCheckpoint(eager = true)
     val dbuckets = tomb.select(dbucketCol(col("doc_id")).as("b")).distinct()
@@ -2537,12 +2536,9 @@ object InvertedIndex {
       .as[Long].collect().sorted.toIndexedSeq
     if (touched.isEmpty) return
     Maintenance.rewriteShards(impactsPathOf(layout), Seq("tbucket"),
-      spark.read.parquet(layout.dataPath)
+      derive(Impacts, spark.read.parquet(layout.dataPath)
         .filter(col("tbucket").isin(touched: _*))
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-        .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-          min(col("dl")).as("dl_min"))
-        .withColumn("tbucket", bucketCol(col("w"))),
+        .join(broadcast(tomb), Seq("doc_id"), "left_anti")),
       touched.map(Seq(_)))
   }
 
@@ -2576,7 +2572,7 @@ object InvertedIndex {
     import spark.implicits._
     val tombDir = tombDirOf(layout)
     if (!hasParquet(tombDir)) return
-    ensureFootprint(spark, layout)
+    backfill(spark, layout, Footprint)
     val tomb = spark.read.parquet(tombDir.toString).select(col("doc_id"))
       .localCheckpoint(eager = true)
     // the batch's dbucket shards — ≤ DocBuckets values, plan-time metadata
@@ -2618,11 +2614,8 @@ object InvertedIndex {
         // already-vacuumed postings, which is the same exact state.
         if (Files.exists(Paths.get(impactsPathOf(layout))))
           Maintenance.rewriteShards(impactsPathOf(layout), Seq("tbucket"),
-            spark.read.parquet(layout.dataPath)
-              .filter(col("tbucket").isin(touched: _*))
-              .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
-                min(col("dl")).as("dl_min"))
-              .withColumn("tbucket", bucketCol(col("w"))),
+            derive(Impacts, spark.read.parquet(layout.dataPath)
+              .filter(col("tbucket").isin(touched: _*))),
             touchedShards)
       })
       // signed decrement through the touched-bucket merge: only the dead
@@ -2668,80 +2661,39 @@ object InvertedIndex {
   }
 
   /** REPAIR: re-derive every DERIVED store from the postings (the
-    * primary) — the recovery op [[auditFrame]]'s findings point at. Dict,
-    * lens, stats, footprint, and impacts are each pure functions of the
-    * posting rows, so one primary-store pass restores derived == primary
-    * no matter which sidecar drifted (a production fleet would repair
-    * only the flagged artifacts with the same derivations; the blanket
-    * form is the simplest correct recovery and is idempotent on healthy
-    * stores). POSITIONS are a primary store themselves (occurrence order
-    * is not derivable from tf) — a damaged positional sidecar needs the
-    * corpus, i.e. a rebuild, not a repair. Pending delete tombstones
-    * must be vacuumed first: stats are decremented at delete time while
-    * postings still hold the dead rows, so a repair under pending
-    * deletes would resurrect pre-delete statistics. */
+    * primary) — the recovery op [[auditFrame]]'s findings point at. Each
+    * derived store is a pure function of the stored postings, or of a
+    * derived store rebuilt before it (dict → its key-set sidecars, lens
+    * → stats), plus the stored zero-length lens rows the postings cannot
+    * show ([[storedInput]]). So one primary-store pass restores derived
+    * == primary no matter which sidecar drifted (a production fleet
+    * would repair only the flagged artifacts with the same derivations;
+    * the blanket form is the simplest correct recovery and is idempotent
+    * on healthy stores). Every store is one replace publish, whose swap
+    * refreshes any frame cached over it. POSITIONS are a primary store
+    * themselves (occurrence order is not derivable from tf) — a damaged
+    * positional sidecar needs the corpus, i.e. a rebuild, not a repair.
+    * Pending delete tombstones must be vacuumed first: stats are
+    * decremented at delete time while postings still hold the dead rows,
+    * so a repair under pending deletes would resurrect pre-delete
+    * statistics. */
   private[graft] def rebuildDerived(spark: SparkSession, layout: Layout): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
     require(!hasParquet(tombDirOf(layout)),
       "pending delete tombstones: vacuum before repair — rebuilding " +
         "stats from postings would resurrect the deleted docs' counts")
-    val post = spark.read.parquet(layout.dataPath)
-    // Every derived store is a pure function of the postings (or of the
-    // rebuilt dict's key set), so the re-derivations run as OVERLAPPED
-    // jobs (Par, guide §2.6) in four chains whose internal order is the
-    // real dependency structure: dict → its key-set sidecars (lex, del,
-    // rev), lens → stats, footprint, impacts, norms. Each step stages
-    // inside its own ensure* or replace publish, unchanged.
-    val chains = Seq.newBuilder[() => Unit]
-    chains += (() => {
-      // dict: full overwrite from posting counts (the build's definition)
-      Maintenance.publishReplace(spark, layout.dictPath) { staged =>
-        post.groupBy(col("w")).agg(count(lit(1)).as("df"))
-          .withColumn("tbucket", bucketCol(col("w")))
-          .repartition(col("tbucket"))
-          .write.mode("overwrite").partitionBy("tbucket").parquet(staged)
-      }
-      // lex + deletion-neighborhood (word indexes): pure functions of the
-      // rebuilt dict's key set — drop + the backfill derivations (each
-      // staged inside its ensure*)
-      if (tokKindOf(layout) == "word") {
-        Maintenance.deleteRecursively(Paths.get(dictLexPathOf(layout)))
-        ensureDictLex(spark, layout)
-        Maintenance.deleteRecursively(Paths.get(dictDelPathOf(layout)))
-        ensureDictDel(spark, layout)
-        Maintenance.deleteRecursively(Paths.get(dictRevPathOf(layout)))
-        ensureDictRev(spark, layout)
-      }
-    })
-    chains += (() => {
-      // lens, then stats from the REBUILT lens (exact integers, the
-      // build's rule) — the one derived-of-derived chain
-      Maintenance.deleteRecursively(Paths.get(lensPathOf(layout)))
-      ensureLens(spark, layout)
-      Maintenance.publishReplace(spark, layout.statsPath)(
-        spark.read.parquet(lensPathOf(layout))
-          .agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl"))
-          .coalesce(1).write.mode("overwrite").parquet(_))
-    })
-    chains += (() => {
-      Maintenance.deleteRecursively(Paths.get(footprintPathOf(layout)))
-      ensureFootprint(spark, layout)
-    })
-    chains += (() => {
-      Maintenance.deleteRecursively(Paths.get(impactsPathOf(layout)))
-      ensureImpacts(spark, layout)
-    })
-    // norms (embed indexes): a pure per-doc function of the postings —
-    // re-derive through the same staged move as the other sidecars
-    if (Files.exists(Paths.get(normsPathOf(layout))))
-      chains += (() =>
-        Maintenance.publishReplace(spark, normsPathOf(layout)) { staged =>
-          normsOf(post)
-            .withColumn("dbucket", dbucketCol(col("doc_id")))
-            .repartition(col("dbucket"))
-            .write.mode("overwrite").partitionBy("dbucket").parquet(staged)
-        })
-    graft.operators.Par.run(chains.result(), parallelism = 5)
+    val stores = Derived.filter(_.kinds(tokKindOf(layout)))
+    def parentOf(s: Store): Option[String] =
+      s.derivation.get.from.store.filter(_ != s.dir)
+    // one chain per store that reads no other derived store, followed by
+    // the stores reading it; the chains run as OVERLAPPED jobs (Par,
+    // guide §2.6)
+    val chains = stores.filter(parentOf(_).isEmpty).map(root =>
+      root +: stores.filter(parentOf(_).contains(root.dir)))
+    graft.operators.Par.run(chains.map(chain => () => chain.foreach(s =>
+      Maintenance.publishReplace(spark, pathOf(layout, s))(
+        writeDerived(s, storedInput(spark, layout, _))))),
+      parallelism = chains.size)
   }
 
   /** Q-bm25-upsert: index MAINTENANCE end-to-end — clone the shared
@@ -2795,28 +2747,20 @@ object InvertedIndex {
 
   /** Fold every fragmented partition of the index's append-only stores —
     * the one maintenance move a long-running ingest schedules when the
-    * [[Maintenance.fileCounts]] census crosses its threshold. Dict and
-    * impacts are NOT here: their maintenance is already a touched-bucket
-    * dynamic overwrite (one file per bucket by construction, never an
-    * append). */
+    * [[Maintenance.fileCounts]] census crosses its threshold: the stores
+    * declared `appended`. Dict, impacts, lex and rev are NOT: their
+    * maintenance is already a touched-bucket dynamic overwrite (one file
+    * per bucket by construction, never an append). */
   private[graft] def compactStores(spark: SparkSession, layout: Layout): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
-    // six disjoint append-only stores under ONE held lease — the folds
-    // are overlapped jobs (Par; compactPartitions takes no lease of its
-    // own, so no child thread re-acquires the root's lease)
-    val stores = Seq(
-      layout.dataPath -> "tbucket",
-      footprintPathOf(layout) -> "dbucket",
-      lensPathOf(layout) -> "dbucket",
-      positionsPathOf(layout) -> "tbucket",
-      normsPathOf(layout) -> "dbucket",
-      // dictdel is append-dominant (new terms' variant rows arrive as new
-      // part files per merge) — fold its fragments with the other appenders
-      dictDelPathOf(layout) -> "vbucket"
-    ).filter { case (p, _) => Files.exists(Paths.get(p)) }
-    graft.operators.Par.run(stores.map { case (p, c) =>
-      () => { Maintenance.compactPartitions(spark, p, Seq(c)); () }
-    }, parallelism = stores.size)
+    // disjoint append-only stores under ONE held lease — the folds are
+    // overlapped jobs (Par; compactPartitions takes no lease of its own,
+    // so no child thread re-acquires the root's lease)
+    val stores = Stores.filter(s =>
+      s.appended && Files.exists(Paths.get(pathOf(layout, s))))
+    graft.operators.Par.run(stores.map(s => () => {
+      Maintenance.compactPartitions(spark, pathOf(layout, s), s.part.toSeq); ()
+    }), parallelism = stores.size)
   }
 
   // the oracle replays the grown corpus as a UNION and re-derives every

@@ -41,8 +41,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stateless path has — Spark snapshots a parquet read's file list at
   * plan time, not its bytes — so the cache narrows nothing and widens
   * nothing; [[IndexCatalog.fetchByIdsServing]] closes the common case
-  * with one invalidate-and-retry on FileNotFoundException. Requests
-  * that START after the maintenance write always see the new stamp. */
+  * with one invalidate-and-retry on a failure [[isTornRead]]
+  * classifies. Requests that START after the maintenance write always
+  * see the new stamp. */
 object ServingCache {
 
   private case class Entry(stamp: String, df: DataFrame)

@@ -268,6 +268,36 @@ class EmbedIndexSpec extends SparkSpecBase with Matchers {
     audit().values.foreach(_ shouldBe 0L)
   }
 
+  test("a zero-token doc: the deep audit stays clean and repair keeps its lens row and stats") {
+    import spark.implicits._
+    val layout = InvertedIndex.cloneIndexNamed(
+      spark, sfDir, EmbedIndex.IndexName, "embed16", "embed-spec-blank")
+    def audit(): Map[String, Long] =
+      InvertedIndex.auditFrame(spark, layout).collect()
+        .map(r => (r.getString(1), r.getLong(2))).toMap
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+    // blank text: embed16 drops blank tokens, so the doc gets a (doc_id,
+    // 0) lens row and no posting
+    InvertedIndex.upsertDocs(spark, layout,
+      Seq((9200001L, "   ")).toDF("doc_id", "text"))
+    spark.read.parquet(InvertedIndex.lensPathOf(layout))
+      .filter(col("doc_id") === 9200001L && col("dl") === 0).count() shouldBe 1L
+    audit().values.foreach(_ shouldBe 0L)
+    val lens = rows(InvertedIndex.lensPathOf(layout))
+    val stats = rows(layout.statsPath)
+    InvertedIndex.rebuildDerived(spark, layout)
+    rows(InvertedIndex.lensPathOf(layout)) shouldBe lens
+    rows(layout.statsPath) shouldBe stats
+    audit().values.foreach(_ shouldBe 0L)
+    // a zero-length row for a doc that HAS postings is still drift
+    Seq((0L, 0)).toDF("doc_id", "dl")
+      .withColumn("dbucket", InvertedIndex.dbucketCol(col("doc_id")))
+      .write.mode("append").partitionBy("dbucket")
+      .parquet(InvertedIndex.lensPathOf(layout))
+    audit()("lens_matches_postings") should be > 0L
+  }
+
   test("the tuned truncation depth is pinned to the live sweep's choice; the tuned serve ranks by the truncated kernel") {
     // the measurement→deployment pin (the IvfTune.TunedNprobe
     // discipline): a corpus/tokenizer change that moves the sweep's

@@ -211,6 +211,43 @@ class IndexAuditSpec extends SparkSpecBase with Matchers {
     err.getMessage should include("vacuum before repair")
   }
 
+  test("rebuildDerived leaves every store of a fresh word, gram3 and embed16 index unchanged") {
+    import scala.jdk.CollectionConverters._
+    // per store: partition directory → parquet file count, and its rows
+    def snapshot(root: java.nio.file.Path)
+        : Map[String, (Map[String, Int], Seq[String])] = {
+      def list(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+        val s = Files.list(p)
+        try s.iterator().asScala.toSeq finally s.close()
+      }
+      def parquetCount(p: java.nio.file.Path): Int =
+        list(p).count(_.getFileName.toString.endsWith(".parquet"))
+      list(root).filter(Files.isDirectory(_)).map { store =>
+        val parts = list(store).filter(Files.isDirectory(_))
+          .map(p => p.getFileName.toString -> parquetCount(p)).toMap
+        store.getFileName.toString -> (parts,
+          spark.read.parquet(store.toString).collect().map(_.toString).sorted.toSeq)
+      }.toMap
+    }
+    Seq(InvertedIndex.IndexName -> "word",
+        graft.operators.FusionTune.GramIndexName -> "gram3",
+        EmbedIndex.IndexName -> "embed16").foreach { case (name, tok) =>
+      val layout = InvertedIndex.cloneIndexNamed(spark, sfDir, name, tok,
+        s"repair-fresh-$tok")
+      val root = Paths.get(layout.dataPath).getParent
+      val before = snapshot(root)
+      InvertedIndex.rebuildDerived(spark, layout)
+      val after = snapshot(root)
+      withClue(s"$tok: ") {
+        // impacts is lazy at build; repair derives it like a backfill
+        (after.keySet -- before.keySet).subsetOf(Set("impacts")) shouldBe true
+        before.foreach { case (store, snap) =>
+          withClue(s"$store: ") { after(store) shouldBe snap }
+        }
+      }
+    }
+  }
+
   test("a planted band-store drift flags exactly bands_match_sigs") {
     val layout = MinhashIndex.cloneIndex(spark, sfDir, "audit-bands")
     Maintenance.deleteRecursively(firstPartitionDir(layout.bandsPath))

@@ -392,6 +392,29 @@ class InvertedIndexSpec extends SparkSpecBase with Matchers {
     spark.read.parquet(layout.dataPath)
       .filter(col("doc_id") % 13 === 5 && col("doc_id") < 1000000L)
       .count() shouldBe 0L
+    // every backfilled store re-derives exactly the rows the build wrote;
+    // impacts, which the build leaves lazy, equals the postings' per-term
+    // extremes
+    import org.apache.spark.sql.functions.{max, min}
+    import InvertedIndex.{DictDel, DictLex, DictRev, Footprint, Impacts, Lens}
+    val fresh = InvertedIndex.cloneIndex(spark, sfDir, "bm25-backfill")
+    val freshRoot = Paths.get(fresh.dataPath).getParent
+    def stored(s: InvertedIndex.Store) =
+      spark.read.parquet(freshRoot.resolve(s.dir).toString)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def impactCols(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("w"), col("tf_max"), col("dl_min"))
+    val impactRows = sorted(impactCols(spark.read.parquet(fresh.dataPath)
+      .groupBy(col("w")).agg(max(col("tf")).as("tf_max"),
+        min(col("dl")).as("dl_min"))))
+    Seq(Lens, Footprint, Impacts, DictLex, DictRev, DictDel).foreach { s =>
+      val built = if (s == Impacts) impactRows else sorted(stored(s))
+      Maintenance.deleteRecursively(freshRoot.resolve(s.dir))
+      InvertedIndex.backfill(spark, fresh, s)
+      val back = if (s == Impacts) impactCols(stored(s)) else stored(s)
+      withClue(s"${s.dir}: ") { sorted(back) shouldBe built }
+    }
   }
 
   test("driver-side bucketOf bit-matches the in-plan bucketCol for every distinct corpus term") {

@@ -108,6 +108,41 @@ class ServingCacheSpec extends SparkSpecBase with Matchers {
       java.nio.file.Paths.get(InvertedIndex.impactsPathOf(layout)))
   }
 
+  test("repair refreshes a resident lex frame: the next upsert's lex merge reads the repaired store") {
+    import spark.implicits._
+    val layout = InvertedIndex.cloneIndex(spark, sfDir, "scache-repair")
+    val lexPath = java.nio.file.Paths.get(InvertedIndex.dictLexPathOf(layout))
+    val p2 = spark.read.parquet(lexPath.toString).select(col("p2")).distinct()
+      .as[String].collect().filter(_.matches("[a-z]{2}")).min
+    Maintenance.deleteRecursively(lexPath.resolve(s"p2=$p2"))
+    // a serving expansion pins a frame over the damaged dictlex/
+    InvertedIndex.expandPrefix(spark, layout, p2, serving = true)
+    InvertedIndex.rebuildDerived(spark, layout)
+    // the merge reads the repaired partition and adds the new term to it
+    InvertedIndex.upsertDocs(spark, layout,
+      Seq((9300001L, s"${p2}qzxv")).toDF("doc_id", "text"))
+    val audit = InvertedIndex.auditFrame(spark, layout).collect()
+      .map(r => (r.getString(1), r.getLong(2))).toMap
+    audit("lex_matches_dict") shouldBe 0L
+    ServingCache.invalidateDir(lexPath)
+  }
+
+  test("isTornRead matches a deleted file directly or as a nested cause, and nothing else") {
+    val gone = Seq[Throwable](
+      new java.io.FileNotFoundException("part-0.parquet"),
+      new java.nio.file.NoSuchFileException("part-0.parquet"),
+      new RuntimeException("[FAILED_READ_FILE.FILE_NOT_EXIST] part-0.parquet"))
+    gone.foreach { t =>
+      withClue(t.getClass.getSimpleName) {
+        ServingCache.isTornRead(t) shouldBe true
+        ServingCache.isTornRead(new RuntimeException("job aborted",
+          new IllegalStateException("task failed", t))) shouldBe true
+      }
+    }
+    ServingCache.isTornRead(new IllegalArgumentException("bad plan",
+      new ArithmeticException("/ by zero"))) shouldBe false
+  }
+
   test("a keymap-less index falls back to the semi-join scan without writing anything") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-scache-nokm").toString
