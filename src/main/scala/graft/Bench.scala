@@ -12,14 +12,16 @@ object Bench {
 
   /** Best-of-two seconds per declared query at one scale factor; -1.0 for
     * a query that failed on ANY run — a broken query must read as broken,
-    * never as fast. Shared by the driver-contract main below and the
+    * never as fast. Each failure's cause goes to stderr as
+    * `[bench] <query> failed: <class>: <message>`, so the JSON line on
+    * stdout keeps its shape. Shared by the driver-contract main below and the
     * per-sf scaling sweep ([[BenchSweep]], at the end of this file). */
   def measure(spark: SparkSession, sfDir: String,
               only: Set[String] = Set.empty): Map[String, Double] = {
     // Warm the session (codegen, parquet footers, JIT) so the first timed
     // query doesn't absorb ~4s of startup.
-    SparkEntry.queries.headOption.foreach { case (_, fn) =>
-      try runOnce(spark, sfDir, fn) catch { case _: Throwable => () }
+    SparkEntry.queries.headOption.foreach { case (name, fn) =>
+      try runOnce(spark, sfDir, fn) catch { case e: Throwable => reportFailure(name, e) }
     }
     val picked =
       if (only.isEmpty) SparkEntry.queries
@@ -31,11 +33,14 @@ object Bench {
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         try { runOnce(spark, sfDir, fn); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable => reportFailure(name, e); -1.0 }
       }
       name -> (if (times.exists(_ < 0)) -1.0 else times.min)
     }
   }
+
+  private def reportFailure(name: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
 
   /** HOST-SPEED CANARY: a fixed CPU-bound micro-job (xxhash64 over 150M
     * longs, folded to one sum) measured best-of-two like every query —

@@ -46,15 +46,12 @@ import org.apache.spark.sql.functions._
   * 100 TB: the build is one tokenize-explode + a (doc, dim) count
   * shuffle — corpus-linear, offline, amortized over every query (the
   * cost q_embed_knn_sql paid PER QUERY, tri-SF 3.60×). A serve touches
-  * |query dims| posting buckets, and (r16) the norms read is
-  * CANDIDATE-PROPORTIONAL: the MaxScore discipline with dims as terms
-  * ([[embedOver]] — θ from the top dim's docs, a Cauchy–Schwarz
-  * essential prefix, norms pruned to the candidates' dbucket partitions
-  * and inner-joined to the candidate dots), falling back to the
-  * rank-every-live-doc left join exactly when fewer than k docs hold
-  * the top dim — the one regime where a zero-dot doc can enter the
-  * top-k. Pruned == unpruned is a theorem (spec-gated) and the oracle
-  * is UNCHANGED. */
+  * |query dims| posting buckets, and the norms read is MATCH-
+  * PROPORTIONAL: norms pruned to the matched docs' dbucket partitions
+  * and inner-joined to their dots in one ranking pass ([[embedOver]]),
+  * falling back to the rank-every-live-doc left join exactly when a
+  * zero-dot doc could enter the top-k. Pruned == unpruned is a theorem
+  * (spec-gated) and the oracle is UNCHANGED. */
 object EmbedIndex {
 
   val IndexName = "docs-embed16"
@@ -74,34 +71,24 @@ object EmbedIndex {
     * lifecycle specs), tombstone-masking like [[InvertedIndex.bm25Over]].
     * Returns (doc_id, score) ordered (score desc, doc_id).
     *
-    * SERVE SHAPE (r16 — the r15 verdict's one `weak` item closed): the
-    * MaxScore discipline ([[InvertedIndex.maxScorePlan]]) applied to the
-    * embed16 postings with DIMENSIONS as terms, so the norms relation is
-    * never scanned corpus-wide and zero-dot docs are never ranked:
+    * SERVE SHAPE: ONE ranking pass over the MATCHED docs — the dots of
+    * the docs holding ≥1 query dimension INNER-joined to their norms,
+    * scored, ranked, the top k collected and returned as a local frame.
+    * Zero-dot docs are never ranked and the norms relation is never
+    * left-joined corpus-wide: the stateless read prunes norms to the
+    * matched docs' dbucket partitions (plan-time PartitionFilters, one
+    * bucket collect); serving mode joins the resident norms frame.
     *
-    *  1. θ = the k-th full rounded score among docs holding the
-    *     highest-qv dimension (one scoring pass restricted to that dim's
-    *     postings; its norms read pruned to those docs' dbucket shards);
-    *  2. the ESSENTIAL prefix E of the qv-descending dim order — the
-    *     smallest prefix whose TAIL satisfies √(Σ_{d∉E} qv_d²)/‖q‖ <
-    *     θ − 1e-6. By Cauchy–Schwarz a doc matching ONLY tail dims has
-    *     cosine ≤ ‖e_tail‖·‖q_tail‖/(‖e‖·‖q‖) ≤ √(Σ_tail qv²)/‖q‖, so it
-    *     scores strictly below θ even after 6-decimal rounding (the
-    *     1e-6 margin absorbs the grid) and cannot enter the top-k;
-    *  3. full scoring RESTRICTED to docs holding ≥1 essential dim, the
-    *     norms read PRUNED to the candidates' dbucket partitions
-    *     (plan-time PartitionFilters) and INNER-joined to the candidate
-    *     dots — cost ∝ candidates, never the corpus.
-    *
-    * Exactness: every true top-k doc scores ≥ θ (θ is achieved by k
-    * candidate docs and d₀ ∈ E), non-candidates score < θ strictly, and
-    * zero-dot docs score exactly 0 < θ — so the pruned result equals the
-    * rank-every-live-doc plan bit-for-bit and q_embed_index keeps
-    * sharing q_embed_knn_sql's oracle VERBATIM. Falls back to
-    * [[embedUnprunedOver]] (the oracle-shape left join over every live
-    * doc, where zero-dot docs rank 0 by doc_id) when fewer than k docs
-    * hold the top dim or θ rounds to ≤ 0 — the only regimes where a
-    * zero-dot doc can legitimately enter the top-k. */
+    * Exactness: every matched doc's dot is a positive integer (tf ≥ 1,
+    * qv ≥ 1) and every unmatched live doc scores exactly 0. So when k
+    * docs matched and the k-th matched score is > 0, no unmatched doc
+    * can enter the top-k, and the matched ranking IS the rank-every-
+    * live-doc ranking restricted — bit-for-bit, so q_embed_index keeps
+    * sharing q_embed_knn_sql's oracle VERBATIM. Otherwise (fewer than k
+    * matched docs, or the k-th score rounds to ≤ 0 — the only regimes
+    * where a zero-dot doc can legitimately enter the top-k) it falls
+    * back to [[embedUnprunedOver]], the oracle-shape left join over
+    * every live doc where zero-dot docs rank 0 by doc_id. */
   private[graft] def embedOver(spark: SparkSession,
                                layout: InvertedIndex.Layout,
                                queryText: String = EmbedOps.FlagshipQuery,
@@ -109,122 +96,31 @@ object EmbedIndex {
                                serving: Boolean = false): DataFrame = {
     import spark.implicits._
     val st = serveState(spark, layout, queryText, serving)
-    // MEMOIZED pruning decision: θ, the essential dim set, and the
-    // candidates' dbucket list are pure functions of the INDEX STATE and
-    // the query, so a repeat query on an unchanged index skips the θ
-    // probe and both bucket collections (2–3 scheduler round-trips — the
-    // serving latency floor once the norms frame is resident). The memo
-    // keys on the same shard-inventory stamps the ServingCache swaps on
-    // (postings + norms + tombstones), so ANY maintenance write
-    // invalidates before the next request reads: a stale θ could
-    // over-prune (a delete can lower the kth score below the old bound),
-    // and the stamp guard makes that state unreachable. Fallback
-    // decisions are never memoized — the <k regime must re-check.
-    val memoKey = (layout.dataPath, queryText, k, serving)
-    val stamp = indexStamp(layout)
-    val memoed = Option(pruneMemos.get(memoKey)).filter(_.stamp == stamp)
-    memoed.foreach { m =>
-      return prunedPlan(st, m.essential, m.candDbuckets, k)
-    }
-    // θ pass: docs holding the highest-qv dim, fully scored — the
-    // restricted pass [[InvertedIndex.maxScorePlan]] step 2 runs, with
-    // the norms read pruned to the d₀ docs' dbucket shards. The bucket
-    // collections exist for STATELESS I/O pruning only: in serving mode
-    // the norms frame is memory-resident (no partition I/O to prune) and
-    // correctness rides the candidate inner join alone, so the two
-    // collect round-trips are skipped — the probe is one job.
-    val ordered = st.qemb.toSeq.sortBy { case (d, v) => (-v, d) }
-    val d0 = ordered.head._1.toString
-    val d0Docs = st.livePost.filter(col("w") === d0)
-      .select(col("doc_id")).distinct()
-    val d0Dbuckets =
+    val dbuckets =
       if (serving) Nil
-      else d0Docs.select(InvertedIndex.dbucketCol(col("doc_id")).as("b"))
+      else st.livePost.select(InvertedIndex.dbucketCol(col("doc_id")).as("b"))
         .distinct().as[Long].collect().sorted.toIndexedSeq
-    val thetaRows = st.normsPruned(d0Dbuckets)
-      .join(st.dots.join(d0Docs, Seq("doc_id"), "left_semi"), Seq("doc_id"))
-      .select(col("doc_id"), st.scoreCol.as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k).collect()
-    if (thetaRows.length < k || thetaRows.last.getDouble(1) <= 0.0)
-      return embedUnprunedOver(spark, layout, queryText, k, serving)
-    val theta = thetaRows.last.getDouble(1)
-    // essential prefix: smallest e with the Cauchy–Schwarz tail bound
-    // strictly under θ − 1e-6 (the 6-decimal grid margin)
-    val e = (1 to ordered.size).find { e0 =>
-      math.sqrt(ordered.drop(e0)
-        .map { case (_, v) => (v * v).toDouble }.sum) / st.sqrtQn2 <
-        theta - 1e-6
-    }.getOrElse(ordered.size)
-    val essential = ordered.take(e).map(_._1.toString)
-    val candDbuckets =
-      if (serving) Nil
-      else st.livePost.filter(col("w").isin(essential: _*))
-        .select(InvertedIndex.dbucketCol(col("doc_id")).as("b"))
-        .distinct().as[Long].collect().sorted.toIndexedSeq
-    // publish-guard (the ServingCache.frame discipline): a maintenance
-    // write landing between the stamp read and the probe jobs would have
-    // derived θ/essential from mixed pre/post-write state — still correct
-    // for THIS request (the final plan re-reads live state), but wrong to
-    // memoize under the new stamp, where the NEXT request would replay it
-    // as current. Re-read and skip the put when the stamp moved; the
-    // write after next then memoizes cleanly.
-    if (indexStamp(layout) == stamp)
-      pruneMemos.put(memoKey, PruneMemo(stamp, essential, candDbuckets))
-    prunedPlan(st, essential, candDbuckets, k)
-  }
-
-  /** The candidate-restricted final plan both the fresh and the memoed
-    * paths serve through — one construction, so a memo hit cannot drift
-    * from the derivation it replays. */
-  private def prunedPlan(st: ServeState, essential: Seq[String],
-                         candDbuckets: Seq[Long], k: Int): DataFrame = {
-    val cand = st.livePost.filter(col("w").isin(essential: _*))
-      .select(col("doc_id")).distinct()
-    st.normsPruned(candDbuckets)
-      .join(st.dots.join(cand, Seq("doc_id"), "left_semi"), Seq("doc_id"))
+    val ranked = st.normsPruned(dbuckets)
+      .join(st.dots, Seq("doc_id"))
       .select(col("doc_id"), st.scoreCol.as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
+    val top = ranked.collect()
+    if (top.length < k || top.last.getDouble(1) <= 0.0)
+      embedUnprunedOver(spark, layout, queryText, k, serving)
+    else spark.createDataFrame(java.util.Arrays.asList(top: _*), ranked.schema)
   }
 
-  private case class PruneMemo(stamp: String, essential: Seq[String],
-                               candDbuckets: Seq[Long])
-  /** Access-ordered LRU with a hard cap: an arbitrary production query
-    * stream (distinct texts, not the bench's fixed rotation) must not
-    * grow driver memory without bound, and retired queries' stale-stamp
-    * entries must eventually leave. Entries are tiny (a stamp string +
-    * a few dim ids), so a few thousand covers any realistic hot set. */
-  private val PruneMemoCap = 4096
-  private val pruneMemos: java.util.Map[(String, String, Int, Boolean), PruneMemo] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String, Int, Boolean), PruneMemo](
-          64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String, Int, Boolean), PruneMemo])
-            : Boolean = size() > PruneMemoCap
-      })
-
-  /** One stamp over every store the pruning decision reads — postings,
-    * norms, and the tombstone dir ([[ServingCache.stampOf]]'s
-    * shard-inventory fold, concatenated). Bounded driver-side metadata:
-    * three local directory listings per request, the same cost class as
-    * the ServingCache's own staleness check. */
-  private def indexStamp(layout: InvertedIndex.Layout): String =
-    ServingCache.stampOf(Paths.get(layout.dataPath)) + "|" +
-      ServingCache.stampOf(Paths.get(InvertedIndex.normsPathOf(layout))) + "|" +
-      ServingCache.stampOf(InvertedIndex.tombDirOf(layout))
-
-  /** The shared per-request serve state: query embedding, masked pruned
-    * postings, per-doc dots, and the norms access path. One derivation
-    * for the pruned plan, the θ pass, and the fallback — a drift between
-    * them would break the pruned == unpruned theorem. */
-  private case class ServeState(qemb: Map[Long, Long], sqrtQn2: Double,
-                                livePost: DataFrame, dots: DataFrame,
+  /** The shared per-request serve state: query norm, masked query-dim
+    * postings, per-doc dots, and the norms access paths. One derivation
+    * for the ranking pass and the fallback — a drift between them would
+    * break the matched == rank-every-doc theorem. */
+  private case class ServeState(sqrtQn2: Double, livePost: DataFrame,
+                                dots: DataFrame,
                                 normsAll: DataFrame,
                                 normsPruned: Seq[Long] => DataFrame) {
     // one rounding expression for every path (dot nullable only in the
-    // fallback's left join; coalesce is a no-op on the inner joins)
+    // fallback's left join; coalesce is a no-op on the inner join)
     def scoreCol: org.apache.spark.sql.Column =
       round(coalesce(col("dot"), lit(0L)).cast("double") /
         (sqrt(col("n2").cast("double")) * lit(sqrtQn2)), 6)
@@ -242,13 +138,12 @@ object EmbedIndex {
     val buckets = InvertedIndex.bucketsOf(dTerms)
     val qdf = qemb.toSeq.sortBy(_._1)
       .map { case (d, v) => (d.toString, v) }.toDF("w", "qv")
-    val post0 = spark.read.parquet(layout.dataPath)
+    // postings and tombstones through stamp-pinned relations (no
+    // per-request listing or schema-inference job; see ServingCache)
+    val post0 = ServingCache.pinned(spark, Paths.get(layout.dataPath))
       .filter(col("tbucket").isin(buckets: _*) && col("w").isin(dTerms: _*))
-    val tombOpt =
-      if (InvertedIndex.hasParquet(InvertedIndex.tombDirOf(layout)))
-        Some(spark.read.parquet(InvertedIndex.tombDirOf(layout).toString)
-          .select(col("doc_id")))
-      else None
+    val tombOpt = ServingCache.pinnedIfAny(spark, InvertedIndex.tombDirOf(layout))
+      .map(_.select(col("doc_id")))
     def masked(df: DataFrame): DataFrame = tombOpt
       .map(t => df.join(broadcast(t), Seq("doc_id"), "left_anti"))
       .getOrElse(df)
@@ -266,11 +161,11 @@ object EmbedIndex {
       if (serving) ServingCache.frame(spark,
         Paths.get(InvertedIndex.normsPathOf(layout)))
       else spark.read.parquet(InvertedIndex.normsPathOf(layout))
-    ServeState(qemb, sqrtQn2, livePost, dots,
+    ServeState(sqrtQn2, livePost, dots,
       masked(normsStore).select(col("doc_id"), col("n2")),
       // the bucket filter is I/O pruning for the stateless read; the
       // resident frame has no partition I/O, so serving mode passes the
-      // whole frame and lets the candidate inner join restrict
+      // whole frame and lets the matched-docs inner join restrict
       bs =>
         (if (serving) normsStore
          else normsStore.filter(col("dbucket").isin(bs: _*)))
@@ -280,8 +175,8 @@ object EmbedIndex {
   /** The ORACLE-SHAPE plan: rank EVERY live doc via a left join onto the
     * full norms relation (zero-dot docs score exactly 0, tie-broken by
     * doc_id) — the fallback [[embedOver]] takes when fewer than k docs
-    * hold the top dimension, and the referee the pruned==unpruned spec
-    * compares against. */
+    * match or the k-th matched score rounds to ≤ 0, and the referee the
+    * pruned==unpruned spec compares against. */
   private[graft] def embedUnprunedOver(spark: SparkSession,
                                        layout: InvertedIndex.Layout,
                                        queryText: String = EmbedOps.FlagshipQuery,
@@ -565,8 +460,8 @@ object EmbedIndex {
     * depth e (score with only the e highest-qv query dims) and report,
     * per e, the candidate volume (docs matching ≥1 kept dim) and the
     * exact-top-5 overlap. The declared serve (q_embed_index) is EXACT by
-    * theorem (MaxScore prunes WHO gets ranked, never what a kept doc
-    * scores); this query prices the approximate alternative a deployment
+    * theorem (the matched-docs restriction prunes WHO gets ranked,
+    * never what a ranked doc scores); this query prices the approximate alternative a deployment
     * would trade for it — truncation changes scores, and the frontier
     * shows what recall that costs at each depth. e = |dims| IS the exact
     * ranking (the degeneration row: hits = k by construction). All

@@ -173,10 +173,16 @@ object IndexCatalog {
     * deferred to vacuum (the LSM-style tombstone discipline — at 100 TB a
     * delete batch must not rewrite partitions synchronously). Partition
     * and pushed filters still prune: Catalyst pushes predicates on index
-    * columns through the anti-join to the scan side. */
+    * columns through the anti-join to the scan side.
+    *
+    * Data and tombstones are read through stamp-pinned relations
+    * ([[ServingCache.pinned]]): a repeat read of an unchanged store
+    * skips partition discovery and the schema-inference job, and any
+    * write moves the stamp before the next read. */
   def load(spark: SparkSession, basePath: String, name: String): DataFrame = {
-    val data = loadRaw(spark, basePath, name)
-    pendingTombstones(spark, basePath, name) match {
+    val data = ServingCache.pinned(spark, Paths.get(basePath, name, "data"))
+    ServingCache.pinnedIfAny(spark, tombstoneDir(basePath, name))
+        .map(_.distinct()) match {
       case Some(ts) if ts.columns.length == 2 =>
         data.join(broadcast(versionedTombstoneMax(ts)),
           hiddenByVersioned(data, ts.columns(0), ts.columns(1)), "left_anti")

@@ -615,10 +615,13 @@ object InvertedIndex {
     // scan jobs those two reads cost are the latency floor under
     // concurrency (the keymap-cache story applied to the lexical tier;
     // Lucene pins the FST + segment stats on heap the same way).
-    // Postings stay stateless: the data plane is partition-pruned and
-    // batch-sized, and pinning it would not survive 100 TB. Staleness
-    // rides the cache's shard-inventory stamp — a dict merge or stats
-    // swap moves it, so the very next request reads the new state
+    // Postings and tombstones are never made resident: the data plane
+    // is partition-pruned and batch-sized. They are read through
+    // stamp-pinned relations instead — a pin holds the store's file list
+    // and schema, not rows, so it costs the same at 100 TB and saves
+    // each request the listing and schema-inference job. Staleness
+    // rides the stores' stamps — a dict merge, stats swap or posting
+    // append moves one, so the very next request reads the new state
     // (spec-gated in ServingCacheSpec).
     def metaFrame(path: String): DataFrame =
       if (serving) ServingCache.frame(spark, Paths.get(path))
@@ -626,7 +629,7 @@ object InvertedIndex {
     // term-filtered postings BEFORE tombstone/exclusion masking: the df
     // correction below must count every stored posting of a query term,
     // exactly as the dict's df counted them at build
-    val post0 = spark.read.parquet(layout.dataPath)
+    val post0 = ServingCache.pinned(spark, Paths.get(layout.dataPath))
       .filter(col("tbucket").isin(buckets: _*) && col("w").isin(terms: _*))
     // pending DELETES (doc-level tombstones, the Lucene deleted-docs
     // read path): mask tombstoned postings from ranking, and correct each
@@ -637,10 +640,8 @@ object InvertedIndex {
     // delete time from the lens sidecar, so every statistic this query
     // serves equals a from-scratch rebuild over the reduced corpus —
     // the incremental==rebuild contract, pre-vacuum.
-    val tombOpt =
-      if (hasParquet(tombDirOf(layout)))
-        Some(spark.read.parquet(tombDirOf(layout).toString).select(col("doc_id")))
-      else None
+    val tombOpt = ServingCache.pinnedIfAny(spark, tombDirOf(layout))
+      .map(_.select(col("doc_id")))
     val post1 = tombOpt
       .map(t => post0.join(broadcast(t), Seq("doc_id"), "left_anti"))
       .getOrElse(post0)

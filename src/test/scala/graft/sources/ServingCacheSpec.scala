@@ -127,6 +127,41 @@ class ServingCacheSpec extends SparkSpecBase with Matchers {
     ServingCache.invalidateDir(lexPath)
   }
 
+  test("the store walk reaches depth-3 leaves: a replaced file moves the stamp at equal count; hidden entries are never listed") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("graft-walk")
+    def put(rel: String): Path = {
+      val f = root.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.write(f, rel.getBytes("UTF-8"))
+    }
+    val visible = Seq("label=0/bucket=1/part-a.parquet",
+      "label=0/bucket=2/part-b.parquet", "label=1/bucket=1/part-c.parquet")
+    visible.foreach(put)
+    Seq("_SUCCESS", "label=0/_SUCCESS", "label=0/bucket=1/.part-a.parquet.crc",
+      ".spark-staging-42/label=0/bucket=1/part-x.parquet",
+      "label=1/.spark-staging-7/part-y.parquet").foreach(put)
+    def relFiles(l: ServingCache.Listing) = l.files
+      .map(f => root.relativize(java.nio.file.Paths.get(f.getPath.toUri.getPath)).toString)
+      .toSet
+    val l1 = ServingCache.walk(root)
+    relFiles(l1) shouldBe visible.toSet
+    // same file count, one depth-3 file swapped for a new name
+    Files.delete(root.resolve("label=0/bucket=2/part-b.parquet"))
+    put("label=0/bucket=2/part-d.parquet")
+    val l2 = ServingCache.walk(root)
+    l2.files.size shouldBe l1.files.size
+    l2.stamp should not be l1.stamp
+    relFiles(l2) shouldBe Set("label=0/bucket=1/part-a.parquet",
+      "label=0/bucket=2/part-d.parquet", "label=1/bucket=1/part-c.parquet")
+    // hidden entries changing never move the stamp
+    put(".spark-staging-43/label=9/bucket=9/part-z.parquet")
+    put("label=1/_SUCCESS")
+    ServingCache.walk(root).stamp shouldBe l2.stamp
+    ServingCache.walk(root.resolve("absent")).files shouldBe empty
+    Maintenance.deleteRecursively(root)
+  }
+
   test("isTornRead matches a deleted file directly or as a nested cause, and nothing else") {
     val gone = Seq[Throwable](
       new java.io.FileNotFoundException("part-0.parquet"),
