@@ -374,14 +374,12 @@ object ServeBench {
               catch {
                 case e: Throwable
                     if graft.sources.ServingCache.isTornRead(e) =>
-                  // the maintainer read a listing poisoned by a reader
-                  // that listed mid-overwrite (see dropStaleListings) —
-                  // drop it and run the next cycle; every maintenance
-                  // op is idempotent/self-healing by its crash
-                  // discipline, so a mid-cycle abort is safe to retry
+                  // the maintainer raced a reader's listing: run the
+                  // next cycle; every maintenance op is idempotent/
+                  // self-healing by its crash discipline, so a mid-cycle
+                  // abort is safe to retry
                   System.err.println(
                     s"[serve] $fam maintainer torn read, retrying: ${e.getMessage}")
-                  graft.sources.ServingCache.dropStaleListings(spark)
                 case e: Throwable =>
                   System.err.println(s"[serve] $fam maintainer failed: ${e.getMessage}")
                   stop.set(true)
@@ -426,9 +424,6 @@ object ServeBench {
                         attempt += 1
                         tornRetries.incrementAndGet()
                         Thread.sleep(50L * attempt)
-                        // a poisoned shared listing would feed every
-                        // re-plan the same deleted file — drop it first
-                        graft.sources.ServingCache.dropStaleListings(spark)
                     }
                   }
                   latencies.add((System.nanoTime() - s) / 1e6)

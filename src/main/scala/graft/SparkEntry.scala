@@ -3,6 +3,8 @@ package graft
 import graft.operators._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.language.reflectiveCalls
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every operator from SURVEY.md §2 is declared here as a named query over
@@ -21,12 +23,31 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EmbedOps.embedKnn(spark, "/root/testdata/sf0.001")
 
+  /** A module declaring named queries and, for each SQL-expressible one,
+    * its oracle. */
+  private[graft] type Module = {
+    def queries: Map[String, (SparkSession, String) => DataFrame]
+    def oracles: Map[String, String]
+  }
+
+  /** Every module, registered once: its queries and their oracles come
+    * from the same entry. */
+  private[graft] def modules: Seq[Module] = Seq[Module](
+    RelationalOps, VectorOps, IvfTune, LshTune, PqTune, IvfPqTune,
+    FusionTune, TextOps, EventOps, DedupOps, EmbedOps, MultimodalOps,
+    AsofJoin, RandomHyperplaneLsh, RangeJoin, CorpusOps, PipelineOps,
+    GraphOps, PqIndex, ReconcileOps, EmbedAnalytics, EmbedPca, DataContract,
+    graft.sources.FormatRoundtrip, graft.sources.InvertedIndex,
+    graft.sources.EmbedIndex, graft.sources.MinhashIndex,
+    graft.sources.IncrementalAudit, graft.streaming.AllCdc,
+    graft.streaming.DocStream, graft.streaming.EventsStream,
+    graft.streaming.VectorStream)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalOps.queries ++ VectorOps.queries ++ IvfTune.queries ++ LshTune.queries ++ PqTune.queries ++ IvfPqTune.queries ++ FusionTune.queries ++ TextOps.queries ++ EventOps.queries ++ DedupOps.queries ++ EmbedOps.queries ++ MultimodalOps.queries ++ AsofJoin.queries ++ RandomHyperplaneLsh.queries ++ RangeJoin.queries ++ CorpusOps.queries ++ PipelineOps.queries ++ GraphOps.queries ++ PqIndex.queries ++ ReconcileOps.queries ++ EmbedAnalytics.queries ++ EmbedPca.queries ++ DataContract.queries ++ graft.sources.FormatRoundtrip.queries ++ graft.sources.InvertedIndex.queries ++ graft.sources.EmbedIndex.queries ++ graft.sources.MinhashIndex.queries ++ graft.sources.IncrementalAudit.queries ++ graft.streaming.AllCdc.queries ++ graft.streaming.DocStream.queries ++ graft.streaming.EventsStream.queries ++ graft.streaming.VectorStream.queries
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalOps.oracles ++ VectorOps.oracles ++ IvfTune.oracles ++ LshTune.oracles ++ PqTune.oracles ++ IvfPqTune.oracles ++ FusionTune.oracles ++ TextOps.oracles ++ EventOps.oracles ++ DedupOps.oracles ++ EmbedOps.oracles ++ MultimodalOps.oracles ++ AsofJoin.oracles ++ RandomHyperplaneLsh.oracles ++ RangeJoin.oracles ++ CorpusOps.oracles ++ PipelineOps.oracles ++ GraphOps.oracles ++ PqIndex.oracles ++ ReconcileOps.oracles ++ EmbedAnalytics.oracles ++ EmbedPca.oracles ++ DataContract.oracles ++ graft.sources.FormatRoundtrip.oracles ++ graft.sources.InvertedIndex.oracles ++ graft.sources.EmbedIndex.oracles ++ graft.sources.MinhashIndex.oracles ++ graft.sources.IncrementalAudit.oracles ++ graft.streaming.AllCdc.oracles ++ graft.streaming.DocStream.oracles ++ graft.streaming.EventsStream.oracles ++ graft.streaming.VectorStream.oracles
+  def oracleSql: Map[String, String] = modules.map(_.oracles).reduce(_ ++ _)
 }

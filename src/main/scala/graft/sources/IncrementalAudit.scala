@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 /** INCREMENTAL index self-audit — the production arm of q_index_audit.
   *
   * The deep audit ([[InvertedIndex.auditFrame]] /
-  * [[MinhashIndex.auditFrame]]) recomputes every invariant over the full
+  * [[MinhashIndex.auditFrame]], each one diff per declared derived store
+  * through [[Store.audit]]) recomputes every invariant over the full
   * physical stores: correct, but corpus-proportional — at fleet scale an
   * audit that costs a full scan per run gets scheduled monthly and
   * corruption lives undetected for weeks. This arm costs ∝ churn: a

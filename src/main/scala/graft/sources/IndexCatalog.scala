@@ -575,7 +575,6 @@ object IndexCatalog {
   def vacuumTombstones(spark: SparkSession, basePath: String, name: String,
                        keyCol: String = "vec_id"): Unit =
       WriterLease.withLease(java.nio.file.Paths.get(basePath, name)) {
-    ServingCache.dropStaleListings(spark) // fresh listings (see upsertInto)
     val ts = pendingTombstones(spark, basePath, name).getOrElse(return)
     require(ts.columns.headOption.contains(keyCol),
       s"index $name has tombstones keyed by '${ts.columns.mkString(",")}', " +
@@ -780,10 +779,6 @@ object IndexCatalog {
                  knownNonEmpty: Boolean = false): Unit =
       WriterLease.withLease(java.nio.file.Paths.get(basePath, name)) {
     require(exists(basePath, name), s"no such index: $name")
-    // a reader listing mid-overwrite can poison the shared listing
-    // cache; a maintainer must start from fresh listings (ServingCache.
-    // dropStaleListings scaladoc — the r18 churn adjudication)
-    ServingCache.dropStaleListings(spark)
     // the layout is DERIVED from the index, never trusted from the caller
     // (see partitionLayout) — the batch must carry those columns
     val partitionCols = partitionLayout(basePath, name)
@@ -1095,9 +1090,6 @@ object IndexCatalog {
       catch {
         case e: Throwable if ServingCache.isTornRead(e) =>
           ServingCache.invalidate(basePath, name)
-          // the re-plan must list FRESH files — a listing cached mid-
-          // overwrite otherwise feeds the retry the same deleted file
-          ServingCache.dropStaleListings(spark)
           lookup()
       }
     if (locValues.isEmpty) return idx.filter(lit(false))

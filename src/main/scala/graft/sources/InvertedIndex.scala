@@ -195,7 +195,7 @@ object InvertedIndex {
     * membership; scoring re-reads df from the dict with the tombstone
     * correction), so maintenance is set-maintenance: a pure function of
     * the dict's key set, merged per touched p2 partition on every dict
-    * merge, rebuilt by [[rebuildDerived]], audited by lex_matches_dict.
+    * merge, rebuilt by [[rebuildDerived]].
     * The empty-string term (empty text tokenizes to one "" token) maps
     * to a sentinel partition so no partition value is empty/null. */
   private[sources] def dictLexPathOf(layout: Layout): String =
@@ -226,7 +226,7 @@ object InvertedIndex {
     * term's reverse lands in ONE r2 partition, so maintenance follows
     * the lex sidecar's touched-partition merge discipline (NOT
     * dictdel's append-dominant form — there is no fanout here), rebuilt
-    * by [[rebuildDerived]], audited by rev_matches_dict. */
+    * by [[rebuildDerived]]. */
   private[sources] def dictRevPathOf(layout: Layout): String =
     pathOf(layout, DictRev)
 
@@ -262,9 +262,8 @@ object InvertedIndex {
     * dictlex this holds KEYS only and is a pure function of the dict's
     * key set: merged per touched vbucket on every dict merge
     * ([[mergeDelPartitions]] inside [[mergeDictBuckets]] — covers upsert
-    * AND vacuum), rebuilt by [[rebuildDerived]], audited by
-    * del_matches_dict. Storage is the documented SymSpell trade:
-    * ~Σ C(|w|, ≤2) ≈ |w|²/2 rows per term — vocabulary-scale metadata
+    * AND vacuum), rebuilt by [[rebuildDerived]]. Storage is the
+    * documented SymSpell trade: ~Σ C(|w|, ≤2) ≈ |w|²/2 rows per term — vocabulary-scale metadata
     * (the Heaps budget), nowhere near posting-scale. */
   private[sources] def dictDelPathOf(layout: Layout): String =
     pathOf(layout, DictDel)
@@ -345,40 +344,22 @@ object InvertedIndex {
       .select(col("w"), col("doc_id"), col("pos").cast("long").as("pos"))
 
   // ---- the store declarations -----------------------------------------
-  // Every store of the index is declared once below. Build, backfill,
-  // repair and compaction read the declarations; none of them names a
-  // store's directory, partition column or derivation itself.
+  // Every store of the index is declared once below ([[Store]]). Build,
+  // backfill, the deep audit, repair and compaction read the
+  // declarations; none of them names a store's directory, partition
+  // column, derivation or invariant itself.
 
-  /** What a derived store is computed from. At build, [[Postings]] and
-    * [[DocLens]] are the tokenizer's in-memory output; backfill and
-    * repair read every input from the stores ([[storedInput]]). `store`
-    * names the derived store an input reads, which repair rebuilds
-    * first. */
-  private[sources] sealed abstract class Input(val store: Option[String])
-  /** Postings rows (w, doc_id, tf, dl). */
+  /** Postings rows (w, doc_id, tf, dl): at build the tokenizer's output,
+    * afterwards the stored postings. */
   private[sources] case object Postings extends Input(None)
   /** The stored postings, tbucket included. */
   private[sources] case object StoredPostings extends Input(None)
-  /** One (doc_id, dl) row per doc. */
-  private[sources] case object DocLens extends Input(Some("lens"))
+  /** One (doc_id, dl) row per doc, from the postings. */
+  private[sources] case object DocLens extends Input(None)
+  /** The same rows as stored in the lens store. */
+  private[sources] case object StoredLens extends Input(Some("lens"))
   /** The stored dict's keys (w). */
   private[sources] case object DictKeys extends Input(Some("dict"))
-
-  /** The one function that derives a store's rows (partition column
-    * included) from its input. */
-  private[sources] final case class Derivation(from: Input,
-                                               rows: DataFrame => DataFrame)
-
-  /** One persisted store: its directory beside `data/`, its partition
-    * column (none for the one-row stats), the tokenizer kinds whose
-    * indexes carry it, and its derivation unless it is a primary store.
-    * `built = false` leaves the store to its first backfill; `appended`
-    * marks the stores maintenance appends to, which compaction folds. */
-  private[sources] final case class Store(dir: String, part: Option[String],
-                                          kinds: Set[String],
-                                          derivation: Option[Derivation] = None,
-                                          built: Boolean = true,
-                                          appended: Boolean = false)
 
   private val AllKinds = Set("word", "gram3", "embed16")
   private val WordOnly = Set("word")
@@ -391,92 +372,83 @@ object InvertedIndex {
 
   private[sources] val Data = Store("data", Some("tbucket"), AllKinds,
     appended = true)
+  // primary: occurrence order is not derivable from tf, so the audit's
+  // positions_match_tf stays a hand-written check
   private[sources] val Positions = Store("positions", Some("tbucket"), WordOnly,
     appended = true)
   // the SAME term hash as the postings: the touched-bucket merge
   // discipline needs both stores on one key
   private[sources] val Dict = Store("dict", Some("tbucket"), AllKinds,
-    Some(Derivation(Postings, p => byTerm(p.groupBy(col("w"))
-      .agg(count(lit(1)).as("df"))))))
+    Some(Derivation(Postings, "dict_df_matches_postings", p => byTerm(
+      p.groupBy(col("w")).agg(count(lit(1)).as("df"))))))
   private[sources] val DictLex = Store("dictlex", Some("p2"), WordOnly,
-    Some(Derivation(DictKeys, lexRowsOf)))
+    Some(Derivation(DictKeys, "lex_matches_dict", lexRowsOf)))
   private[sources] val DictRev = Store("dictrev", Some("r2"), WordOnly,
-    Some(Derivation(DictKeys, revRowsOf)))
+    Some(Derivation(DictKeys, "rev_matches_dict", revRowsOf)))
   // variant-hash partitioned, so a fuzzy query reads only its own
   // variants' buckets
   private[sources] val DictDel = Store("dictdel", Some("vbucket"), WordOnly,
-    Some(Derivation(DictKeys, k =>
+    Some(Derivation(DictKeys, "del_matches_dict", k =>
       delRowsOf(k).withColumn("vbucket", bucketCol(col("v"))))),
     appended = true)
+  // a zero-length row is healthy only for a doc without postings (its
+  // text yielded no token), which [[storedInput]] keeps
   private[sources] val Lens = Store("lens", Some("dbucket"), AllKinds,
-    Some(Derivation(DocLens, byDoc)), appended = true)
+    Some(Derivation(DocLens, "lens_matches_postings", byDoc)), appended = true)
   // (n, total_dl), NOT (n, avgdl): the average is one double division
   // away, and storing the EXACT integer total is what lets an upsert
   // update the stats incrementally without FP drift (n·avgdl does not
-  // round-trip to the exact token total)
+  // round-trip to the exact token total). Live: a delete lowers the
+  // stats at once, while lens keeps the dead rows until vacuum.
   private[sources] val Stats = Store("stats", None, AllKinds,
-    Some(Derivation(DocLens, l =>
-      l.agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl")))))
+    Some(Derivation(StoredLens, "stats_match_lens", l =>
+      l.agg(count(lit(1)).as("n"), sum(col("dl")).as("total_dl")), live = true)))
   // tbucket cast long: the partition-inferred int must match the upsert
   // append path, which derives it as a long hash
   private[sources] val Footprint = Store("footprint", Some("dbucket"), AllKinds,
-    Some(Derivation(StoredPostings, p => byDoc(p.select(col("doc_id"),
-      col("tbucket").cast("long").as("tbucket")).distinct()))),
+    Some(Derivation(StoredPostings, "footprint_matches_postings", p => byDoc(
+      p.select(col("doc_id"), col("tbucket").cast("long").as("tbucket")).distinct()))),
     appended = true)
+  // a BOUND of the scorable postings (tombstones masked), not an
+  // equality: its purpose is MaxScore validity, and the scorer masks
+  // tombstoned rows before ranking, so deletes legitimately leave the
+  // bounds stale-but-valid until vacuum or [[refreshImpacts]]
   private[sources] val Impacts = Store("impacts", Some("tbucket"), AllKinds,
-    Some(Derivation(StoredPostings, p => byTerm(p.groupBy(col("w"))
-      .agg(max(col("tf")).as("tf_max"), min(col("dl")).as("dl_min"))))),
+    Some(Derivation(StoredPostings, "impacts_bound_postings", p => byTerm(
+      p.groupBy(col("w")).agg(max(col("tf")).as("tf_max"), min(col("dl")).as("dl_min"))),
+      Bound("w", upper = "tf_max", lower = "dl_min"), live = true)),
     built = false)
   private[sources] val Norms = Store("norms", Some("dbucket"), Set("embed16"),
-    Some(Derivation(Postings, p => byDoc(normsOf(p)))), appended = true)
+    Some(Derivation(Postings, "norms_match_postings", p => byDoc(normsOf(p)))),
+    appended = true)
 
   /** Every store: the primaries, then the derived stores in build order
     * (a store reading another derived store comes after it). */
   private val Stores = Seq(Data, Positions, Dict, DictLex, DictRev, DictDel,
     Lens, Stats, Footprint, Impacts, Norms)
-  private val Derived = Stores.filter(_.derivation.isDefined)
+
+  /** The stores an index of `layout`'s tokenizer kind carries. */
+  private def storesOf(layout: Layout): Seq[Store] =
+    Stores.filter(_.kinds(tokKindOf(layout)))
 
   private def pathOf(layout: Layout, s: Store): String =
-    leaseRoot(layout).resolve(s.dir).toString
+    Store.pathOf(leaseRoot(layout), s)
 
-  /** Write `rows` as store `s` at `path`: one task, and so one file, per
-    * partition directory (the createIfAbsent small-files discipline). */
-  private def writeStore(s: Store, rows: DataFrame, path: String): Unit =
-    s.part match {
-      case Some(c) =>
-        rows.repartition(col(c)).write.mode("overwrite").partitionBy(c).parquet(path)
-      case None => rows.coalesce(1).write.mode("overwrite").parquet(path)
-    }
-
-  /** Append `rows` (partition column included) to store `s`: new part
-    * files in the touched partitions, which compaction later folds. */
-  private def appendStore(layout: Layout, s: Store, rows: DataFrame): Unit = {
-    val c = s.part.get
-    rows.repartition(col(c)).write.mode("append").partitionBy(c)
-      .parquet(pathOf(layout, s))
-  }
-
-  /** The rows of derived store `s` for the input rows `in`. */
-  private def derive(s: Store, in: DataFrame): DataFrame = s.derivation.get.rows(in)
-
-  /** Write derived store `s` at `path` from its input as `input` binds it. */
-  private def writeDerived(s: Store, input: Input => DataFrame)(path: String): Unit =
-    writeStore(s, derive(s, input(s.derivation.get.from)), path)
-
-  /** An input read from the stores — what backfill and repair derive
-    * from. A doc whose text yields no token (embed16 drops blank tokens)
-    * has a zero-length lens row and no posting, so the postings cannot
-    * show it: the stored zero-length rows of docs without postings are
-    * kept. */
-  private def storedInput(spark: SparkSession, layout: Layout, in: Input): DataFrame =
+  /** Input `in` as stored — what backfill, the deep audit and repair
+    * derive from. The doc lens rows come from the postings; a doc whose
+    * text yields no token (embed16 drops blank tokens) has a zero-length
+    * lens row and no posting, so the postings cannot show it: the stored
+    * zero-length rows of docs without postings are kept. */
+  private def storedInput(read: String => DataFrame, layout: Layout, in: Input): DataFrame =
     in match {
-      case Postings | StoredPostings => spark.read.parquet(layout.dataPath)
-      case DictKeys => spark.read.parquet(layout.dictPath).select(col("w"))
+      case Postings | StoredPostings => read(layout.dataPath)
+      case DictKeys => read(layout.dictPath).select(col("w"))
+      case StoredLens => read(lensPathOf(layout)).select(col("doc_id"), col("dl"))
       case DocLens =>
-        val post = spark.read.parquet(layout.dataPath)
+        val post = read(layout.dataPath)
         val fromPostings = post.select(col("doc_id"), col("dl")).distinct()
         if (!Files.exists(Paths.get(lensPathOf(layout)))) fromPostings
-        else fromPostings.unionByName(spark.read.parquet(lensPathOf(layout))
+        else fromPostings.unionByName(read(lensPathOf(layout))
           .filter(col("dl") === 0).select(col("doc_id"), col("dl"))
           .join(post.select(col("doc_id")), Seq("doc_id"), "left_anti"))
     }
@@ -489,7 +461,8 @@ object InvertedIndex {
   private[sources] def backfill(spark: SparkSession, layout: Layout,
                                 stores: Store*): Unit =
     stores.foreach(s => Maintenance.publishIfAbsent(pathOf(layout, s))(
-      writeDerived(s, storedInput(spark, layout, _))))
+      Store.write(s, s.derive(storedInput(spark.read.parquet(_), layout,
+        s.derivation.get.from)), _)))
 
   /** The tokenizer REGISTRY: every feature extractor an index can be
     * built with, keyed by the name recorded in `_text_index.json`.
@@ -538,17 +511,17 @@ object InvertedIndex {
       val (postings, lens) = postingsOfWith(Tables.documents(spark, dir), tok)
       // the primaries first: footprint and the dict key-set sidecars
       // derive from what is already stored
-      writeStore(Data, byTerm(postings), layout.dataPath)
+      Store.write(Data, byTerm(postings), layout.dataPath)
       if (Positions.kinds(tokKind))
-        writeStore(Positions, byTerm(positionsOf(Tables.documents(spark, dir), tok)),
+        Store.write(Positions, byTerm(positionsOf(Tables.documents(spark, dir), tok)),
           pathOf(layout, Positions))
       def input(in: Input): DataFrame = in match {
         case Postings => postings
-        case DocLens => lens
-        case stored => storedInput(spark, layout, stored)
+        case DocLens | StoredLens => lens
+        case stored => storedInput(spark.read.parquet(_), layout, stored)
       }
-      Derived.filter(s => s.built && s.kinds(tokKind))
-        .foreach(s => writeDerived(s, input)(pathOf(layout, s)))
+      Stores.filter(s => s.derivation.isDefined && s.built && s.kinds(tokKind))
+        .foreach(s => Store.write(s, s.derive(input(s.derivation.get.from)), pathOf(layout, s)))
       Files.writeString(markerOf(base, name),
         s"""{"name": "$name", "kind": "inverted", "buckets": $TermBuckets, """ +
           s""""tok": "$tokKind", "dictv": $DictFormatVersion}""")
@@ -1969,163 +1942,38 @@ object InvertedIndex {
        |ORDER BY span_tf DESC, doc_id LIMIT 10""".stripMargin
 
   /** PHYSICAL-LAYER self-audit of one inverted-index layout — one row per
-    * invariant with its violation count (0 on a healthy store). The
-    * invariants are exactly the cross-store redundancies the maintenance
-    * code is trusted to keep in lockstep; each is one aggregation over
-    * the stores, so the audit is runnable at fleet scale:
-    *  - dict_df_matches_postings: every term's dict df equals its stored
-    *    posting count (and neither store has a term the other lacks);
-    *  - lens_matches_postings: the lens sidecar holds exactly the
-    *    distinct (doc_id, dl) pairs the postings denormalize, plus
-    *    zero-length rows for docs without postings;
-    *  - stats_match_lens: (n, total_dl) equal the lens aggregate;
-    *  - footprint_matches_postings: the doc→tbucket sidecar mirrors the
-    *    postings' distinct (doc_id, tbucket) pairs;
-    *  - impacts_bound_postings: every term's stored (tf_max, dl_min)
-    *    BOUNDS its postings (≥ max tf, ≤ min dl; missing term = violation)
-    *    — validity, not equality, because deletes legitimately leave
-    *    bounds stale until vacuum;
-    *  - positions_match_tf: per (w, doc_id), the positional sidecar holds
-    *    exactly tf occurrences (word indexes; absent store = skipped).
-    * The audit reads the PHYSICAL layer: pending tombstones are the read
-    * path's masking business and do not violate any of these. */
+    * invariant with its violation count (0 on a healthy store). Every
+    * derived store of the index's tokenizer kind is diffed against its
+    * declared derivation ([[Store.audit]]), under the invariant its
+    * declaration names: exact equality for all but the impact bounds,
+    * which must only BOUND the scorable postings. Stats and impacts are
+    * checked against the live docs (pending tombstones masked), every
+    * other store against the physical rows, so pending deletes violate
+    * no invariant. One check is hand-written, on the primary positions
+    * store: positions_match_tf — per (w, doc_id), the positional sidecar
+    * holds exactly tf occurrences (word indexes). */
   private[graft] def auditFrame(spark: SparkSession, layout: Layout,
                                 artifact: String = "inverted"): DataFrame = {
     backfill(spark, layout, Lens, Footprint, Impacts)
-    val post = spark.read.parquet(layout.dataPath)
-    def row(inv: String, violations: org.apache.spark.sql.Column,
-            from: DataFrame): DataFrame =
-      from.agg(coalesce(violations, lit(0L)).as("violations"))
-        .select(lit(artifact).as("artifact"), lit(inv).as("invariant"),
-          col("violations"))
-    val dictCmp = post.groupBy(col("w")).agg(count(lit(1)).as("adf"))
-      .join(spark.read.parquet(layout.dictPath).select(col("w"), col("df")),
-        Seq("w"), "full_outer")
-    val d1 = row("dict_df_matches_postings",
-      sum(when(col("adf").isNull || col("df").isNull ||
-        col("adf") =!= col("df"), 1L).otherwise(0L)), dictCmp)
-    // a zero-length lens row is healthy only for a doc without postings
-    // (its text yielded no token), which the postings cannot show
-    val postLens = post.select(col("doc_id"), col("dl")).distinct()
-    val lensCmp = postLens.withColumn("p", lit(1))
-      .join(spark.read.parquet(lensPathOf(layout))
-          .select(col("doc_id"), col("dl")).withColumn("l", lit(1)),
-        Seq("doc_id", "dl"), "full_outer")
-      .join(postLens.select(col("doc_id"), lit(1).as("posted")).distinct(),
-        Seq("doc_id"), "left")
-    val d2 = row("lens_matches_postings",
-      sum(when(col("l").isNull || (col("p").isNull &&
-        (col("dl") =!= 0 || col("posted").isNotNull)), 1L).otherwise(0L)),
-      lensCmp)
-    val statsCmp = spark.read.parquet(lensPathOf(layout))
-      .agg(count(lit(1)).as("cn"), sum(col("dl")).as("cdl"))
-      .crossJoin(spark.read.parquet(layout.statsPath))
-    val d3 = row("stats_match_lens",
-      sum(when(col("cn") =!= col("n") || col("cdl") =!= col("total_dl"),
-        1L).otherwise(0L)), statsCmp)
-    val footCmp = post
-      .select(col("doc_id"), col("tbucket").cast("long").as("tbucket")).distinct()
-      .withColumn("p", lit(1))
-      .join(spark.read.parquet(footprintPathOf(layout))
-          .select(col("doc_id"), col("tbucket"), lit(1).as("f")),
-        Seq("doc_id", "tbucket"), "full_outer")
-    val d4 = row("footprint_matches_postings",
-      sum(when(col("p").isNull || col("f").isNull, 1L).otherwise(0L)), footCmp)
-    // impacts bound the SCORABLE postings (tombstones masked): the
-    // invariant's purpose is MaxScore validity, and the scorer masks
-    // tombstoned rows before ranking — so a [[refreshImpacts]] bound
-    // tighter than a dead row's tf is healthy, not drift. On a
-    // vacuumed store the masked and physical views coincide.
-    val scorable =
-      if (hasParquet(tombDirOf(layout)))
-        post.join(broadcast(spark.read.parquet(tombDirOf(layout).toString)
-          .select(col("doc_id"))), Seq("doc_id"), "left_anti")
-      else post
-    val impCmp = scorable.groupBy(col("w"))
-      .agg(max(col("tf")).as("atf"), min(col("dl")).as("adl"))
-      .join(spark.read.parquet(impactsPathOf(layout))
-          .select(col("w"), col("tf_max"), col("dl_min")),
-        Seq("w"), "left")
-    val d5 = row("impacts_bound_postings",
-      sum(when(col("tf_max").isNull || col("tf_max") < col("atf") ||
-        col("dl_min") > col("adl"), 1L).otherwise(0L)), impCmp)
-    val base = d1.unionByName(d2).unionByName(d3).unionByName(d4).unionByName(d5)
-    val withPos =
-      if (!Files.exists(Paths.get(positionsPathOf(layout)))) base
-      else {
-        val posCmp = spark.read.parquet(positionsPathOf(layout))
-          .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("ptf"))
-          .join(post.select(col("w"), col("doc_id"), col("tf")),
-            Seq("w", "doc_id"), "full_outer")
-        val d6 = row("positions_match_tf",
-          sum(when(col("ptf").isNull || col("tf").isNull ||
-            col("ptf") =!= col("tf"), 1L).otherwise(0L)), posCmp)
-        base.unionByName(d6)
-      }
-    // embed indexes carry the squared-norm sidecar — a pure per-doc
-    // function of the postings, so drift is one full-outer recompute
-    val withNorms =
-      if (!Files.exists(Paths.get(normsPathOf(layout)))) withPos
-      else {
-        val normCmp = normsOf(post).withColumnRenamed("n2", "an2")
-          .join(spark.read.parquet(normsPathOf(layout))
-              .select(col("doc_id"), col("n2")),
-            Seq("doc_id"), "full_outer")
-        val d7 = row("norms_match_postings",
-          sum(when(col("an2").isNull || col("n2").isNull ||
-            col("an2") =!= col("n2"), 1L).otherwise(0L)), normCmp)
-        withPos.unionByName(d7)
-      }
-    // word indexes carry the prefix-ordered lex sidecar — a pure function
-    // of the dict's key set: missing keys, surplus keys, and a stored len
-    // that disagrees with the key itself all land in one counter
-    val withLex =
-      if (!Files.exists(Paths.get(dictLexPathOf(layout)))) withNorms
-      else {
-        val lexCmp = spark.read.parquet(layout.dictPath)
-          .select(col("w")).withColumn("dk", lit(1))
-          .join(spark.read.parquet(dictLexPathOf(layout))
-              .select(col("w"), col("len")).withColumn("lk", lit(1)),
-            Seq("w"), "full_outer")
-        val d8 = row("lex_matches_dict",
-          sum(when(col("dk").isNull || col("lk").isNull ||
-            col("len") =!= length(col("w")), 1L).otherwise(0L)), lexCmp)
-        withNorms.unionByName(d8)
-      }
-    // word indexes also carry the deletion-neighborhood sidecar — a pure
-    // function of the same key set: the exact variant recompute is
-    // full_outer-joined against the stored (v, w) rows, so a missing
-    // variant, a surplus variant, and a variant for a dead term all land
-    // in one counter
-    val withDel =
-      if (!Files.exists(Paths.get(dictDelPathOf(layout)))) withLex
-      else {
-        val delCmp = delRowsOf(spark.read.parquet(layout.dictPath)
-            .select(col("w"))).withColumn("ek", lit(1))
-          .join(spark.read.parquet(dictDelPathOf(layout))
-              .select(col("v"), col("w")).withColumn("sk", lit(1)),
-            Seq("v", "w"), "full_outer")
-        val d9 = row("del_matches_dict",
-          sum(when(col("ek").isNull || col("sk").isNull, 1L).otherwise(0L)),
-          delCmp)
-        withLex.unionByName(d9)
-      }
-    // word indexes also carry the reversed-term sidecar — a pure
-    // function of the same key set on the reversed join key: missing
-    // keys, surplus keys, and a stored rw that is not the key's own
-    // reverse all land in one counter
-    if (!Files.exists(Paths.get(dictRevPathOf(layout)))) withDel
-    else {
-      val revCmp = spark.read.parquet(layout.dictPath)
-        .select(col("w")).withColumn("dk", lit(1))
-        .join(spark.read.parquet(dictRevPathOf(layout))
-            .select(col("w"), col("rw")).withColumn("rk", lit(1)),
-          Seq("w"), "full_outer")
-      val d10 = row("rev_matches_dict",
-        sum(when(col("dk").isNull || col("rk").isNull ||
-          col("rw") =!= reverse(col("w")), 1L).otherwise(0L)), revCmp)
-      withDel.unionByName(d10)
-    }
+    // one read per store directory: each read infers its schema in a job
+    val reads = scala.collection.mutable.Map.empty[String, DataFrame]
+    def read(path: String): DataFrame = reads.getOrElseUpdate(path, spark.read.parquet(path))
+    val tombs = tombDirOf(layout)
+    def live(df: DataFrame): DataFrame =
+      if (!hasParquet(tombs)) df
+      else df.join(broadcast(read(tombs.toString).select(col("doc_id"))),
+        Seq("doc_id"), "left_anti")
+    val stores = storesOf(layout)
+    val derived = Store.audit(artifact, leaseRoot(layout), stores, read,
+      storedInput(read, layout, _), live)
+    if (!stores.contains(Positions)) derived
+    else derived.unionByName(Store.auditRow(artifact, "positions_match_tf",
+      sum(when(col("ptf").isNull || col("tf").isNull ||
+        col("ptf") =!= col("tf"), 1L).otherwise(0L)),
+      read(positionsPathOf(layout))
+        .groupBy(col("w"), col("doc_id")).agg(count(lit(1)).as("ptf"))
+        .join(read(layout.dataPath).select(col("w"), col("doc_id"), col("tf")),
+          Seq("w", "doc_id"), "full_outer")))
   }
 
   /** New-doc derivation for the declared upsert query: the first
@@ -2158,9 +2006,6 @@ object InvertedIndex {
     *    build over the grown corpus would */
   def upsertDocs(spark: SparkSession, layout: Layout, docs: DataFrame): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
-    // fresh listings first: a reader listing mid-overwrite can poison
-    // the shared listing cache (ServingCache.dropStaleListings scaladoc)
-    ServingCache.dropStaleListings(spark)
     // backfill BEFORE the posting append: a pre-sidecar index derives its
     // lens (and impact bounds) from the stored postings, which must not
     // yet include this batch
@@ -2188,14 +2033,14 @@ object InvertedIndex {
     // the streaming path replays the whole batch by marker, and the
     // audit/repair family is the named backstop for direct callers.
     val tasks = Seq.newBuilder[() => Unit]
-    tasks += (() => appendStore(layout, Data, newPost))
+    tasks += (() => Store.append(leaseRoot(layout), Data, newPost))
     tasks += (() =>
       mergeDictBuckets(spark, layout,
         newPost.groupBy(col("w")).agg(count(lit(1)).as("ddf"))))
     // impact bounds: max/min-merge of the batch's per-term extremes into
     // the touched buckets — EXACT for add-only maintenance (the max of two
     // true maxima is the true maximum of the union)
-    tasks += (() => mergeImpactBuckets(spark, layout, derive(Impacts, newPost)))
+    tasks += (() => mergeImpactBuckets(spark, layout, Impacts.derive(newPost)))
     tasks += (() => {
       val d = lens.agg(count(lit(1)).as("dn"), sum(col("dl")).as("ddl")).head()
       val mergedStats = spark.read.parquet(layout.statsPath)
@@ -2207,21 +2052,21 @@ object InvertedIndex {
     // lens follows the corpus: the batch's (doc_id, dl) rows append into
     // their dbucket shards (∝ batch), so a later DELETE of an upserted
     // doc finds its length in a pruned read
-    tasks += (() => appendStore(layout, Lens, derive(Lens, lens)))
+    tasks += (() => Store.append(leaseRoot(layout), Lens, Lens.derive(lens)))
     // footprint follows too: new doc_ids append their (doc_id, tbucket)
     // pairs into their dbucket shards — delete-side discovery stays
     // batch-proportional for docs added after the build
-    tasks += (() => appendStore(layout, Footprint, derive(Footprint, newPost)))
+    tasks += (() => Store.append(leaseRoot(layout), Footprint, Footprint.derive(newPost)))
     // positional sidecar follows (word indexes carry it from build):
     // pure append of the batch's occurrence stream — I/O ∝ batch
     if (Files.exists(Paths.get(positionsPathOf(layout))))
-      tasks += (() => appendStore(layout, Positions,
+      tasks += (() => Store.append(leaseRoot(layout), Positions,
         byTerm(positionsOf(docs, tokenizerOf(tokKindOf(layout))))))
     // squared-norm sidecar follows (embed indexes carry it from build):
     // a NEW doc's n2 is a pure per-doc aggregate of its own batch
     // postings — append ∝ batch into the batch ids' dbucket shards
     if (Files.exists(Paths.get(normsPathOf(layout))))
-      tasks += (() => appendStore(layout, Norms, derive(Norms, newPost)))
+      tasks += (() => Store.append(leaseRoot(layout), Norms, Norms.derive(newPost)))
     graft.operators.Par.run(tasks.result(), parallelism = 6)
   }
 
@@ -2388,9 +2233,9 @@ object InvertedIndex {
     import spark.implicits._
     val delPath = dictDelPathOf(layout)
     if (enteringTerms.limit(1).count() > 0)
-      appendStore(layout, DictDel, derive(DictDel, enteringTerms))
+      Store.append(leaseRoot(layout), DictDel, DictDel.derive(enteringTerms))
     if (leavingTerms.limit(1).count() > 0) {
-      val deadRows = derive(DictDel, leavingTerms).localCheckpoint(eager = true)
+      val deadRows = DictDel.derive(leavingTerms).localCheckpoint(eager = true)
       val touchedVb = deadRows.select(col("vbucket")).distinct()
         .as[Long].collect().sorted.toIndexedSeq
       Maintenance.rewriteShards(delPath, Seq("vbucket"),
@@ -2467,7 +2312,6 @@ object InvertedIndex {
     * ([[IndexCatalog.upsertInto]]'s versionCol); callers vacuum first. */
   def deleteDocs(spark: SparkSession, layout: Layout, ids: DataFrame): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
-    ServingCache.dropStaleListings(spark) // fresh listings (see upsertDocs)
     backfill(spark, layout, Lens)
     val tombDir = tombDirOf(layout)
     val existing =
@@ -2537,7 +2381,7 @@ object InvertedIndex {
       .as[Long].collect().sorted.toIndexedSeq
     if (touched.isEmpty) return
     Maintenance.rewriteShards(impactsPathOf(layout), Seq("tbucket"),
-      derive(Impacts, spark.read.parquet(layout.dataPath)
+      Impacts.derive(spark.read.parquet(layout.dataPath)
         .filter(col("tbucket").isin(touched: _*))
         .join(broadcast(tomb), Seq("doc_id"), "left_anti")),
       touched.map(Seq(_)))
@@ -2569,7 +2413,6 @@ object InvertedIndex {
     * corpus. */
   def vacuum(spark: SparkSession, layout: Layout): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
-    ServingCache.dropStaleListings(spark) // fresh listings (see upsertDocs)
     import spark.implicits._
     val tombDir = tombDirOf(layout)
     if (!hasParquet(tombDir)) return
@@ -2615,7 +2458,7 @@ object InvertedIndex {
         // already-vacuumed postings, which is the same exact state.
         if (Files.exists(Paths.get(impactsPathOf(layout))))
           Maintenance.rewriteShards(impactsPathOf(layout), Seq("tbucket"),
-            derive(Impacts, spark.read.parquet(layout.dataPath)
+            Impacts.derive(spark.read.parquet(layout.dataPath)
               .filter(col("tbucket").isin(touched: _*))),
             touchedShards)
       })
@@ -2661,40 +2504,28 @@ object InvertedIndex {
     Maintenance.deleteRecursively(tombDir)
   }
 
-  /** REPAIR: re-derive every DERIVED store from the postings (the
-    * primary) — the recovery op [[auditFrame]]'s findings point at. Each
-    * derived store is a pure function of the stored postings, or of a
-    * derived store rebuilt before it (dict → its key-set sidecars, lens
-    * → stats), plus the stored zero-length lens rows the postings cannot
-    * show ([[storedInput]]). So one primary-store pass restores derived
-    * == primary no matter which sidecar drifted (a production fleet
-    * would repair only the flagged artifacts with the same derivations;
-    * the blanket form is the simplest correct recovery and is idempotent
-    * on healthy stores). Every store is one replace publish, whose swap
-    * refreshes any frame cached over it. POSITIONS are a primary store
-    * themselves (occurrence order is not derivable from tf) — a damaged
-    * positional sidecar needs the corpus, i.e. a rebuild, not a repair.
-    * Pending delete tombstones must be vacuumed first: stats are
-    * decremented at delete time while postings still hold the dead rows,
-    * so a repair under pending deletes would resurrect pre-delete
-    * statistics. */
+  /** REPAIR: re-derive every DERIVED store of the index's kind from the
+    * stored postings ([[Store.rebuild]]) — the recovery op
+    * [[auditFrame]]'s findings point at. Each derived store is a pure
+    * function of the stored postings, or of a derived store rebuilt
+    * before it (dict → its key-set sidecars, lens → stats), plus the
+    * stored zero-length lens rows the postings cannot show
+    * ([[storedInput]]). So one pass restores derived == primary no matter
+    * which sidecar drifted (the blanket form is the simplest correct
+    * recovery and is idempotent on healthy stores). POSITIONS are a
+    * primary store themselves (occurrence order is not derivable from
+    * tf) — a damaged positional sidecar needs the corpus, i.e. a
+    * rebuild, not a repair. Pending delete tombstones must be vacuumed
+    * first: lens keeps the dead rows until vacuum while stats were
+    * decremented at delete time, so a repair under pending deletes would
+    * resurrect pre-delete statistics. */
   private[graft] def rebuildDerived(spark: SparkSession, layout: Layout): Unit =
       WriterLease.withLease(leaseRoot(layout)) {
     require(!hasParquet(tombDirOf(layout)),
       "pending delete tombstones: vacuum before repair — rebuilding " +
         "stats from postings would resurrect the deleted docs' counts")
-    val stores = Derived.filter(_.kinds(tokKindOf(layout)))
-    def parentOf(s: Store): Option[String] =
-      s.derivation.get.from.store.filter(_ != s.dir)
-    // one chain per store that reads no other derived store, followed by
-    // the stores reading it; the chains run as OVERLAPPED jobs (Par,
-    // guide §2.6)
-    val chains = stores.filter(parentOf(_).isEmpty).map(root =>
-      root +: stores.filter(parentOf(_).contains(root.dir)))
-    graft.operators.Par.run(chains.map(chain => () => chain.foreach(s =>
-      Maintenance.publishReplace(spark, pathOf(layout, s))(
-        writeDerived(s, storedInput(spark, layout, _))))),
-      parallelism = chains.size)
+    Store.rebuild(spark, leaseRoot(layout), storesOf(layout),
+      storedInput(spark.read.parquet(_), layout, _))
   }
 
   /** Q-bm25-upsert: index MAINTENANCE end-to-end — clone the shared
@@ -2749,20 +2580,12 @@ object InvertedIndex {
   /** Fold every fragmented partition of the index's append-only stores —
     * the one maintenance move a long-running ingest schedules when the
     * [[Maintenance.fileCounts]] census crosses its threshold: the stores
-    * declared `appended`. Dict, impacts, lex and rev are NOT: their
-    * maintenance is already a touched-bucket dynamic overwrite (one file
-    * per bucket by construction, never an append). */
+    * declared `appended` ([[Store.compact]]). Dict, impacts, lex and rev
+    * are NOT: their maintenance is already a touched-bucket dynamic
+    * overwrite (one file per bucket by construction, never an append). */
   private[graft] def compactStores(spark: SparkSession, layout: Layout): Unit =
-      WriterLease.withLease(leaseRoot(layout)) {
-    // disjoint append-only stores under ONE held lease — the folds are
-    // overlapped jobs (Par; compactPartitions takes no lease of its own,
-    // so no child thread re-acquires the root's lease)
-    val stores = Stores.filter(s =>
-      s.appended && Files.exists(Paths.get(pathOf(layout, s))))
-    graft.operators.Par.run(stores.map(s => () => {
-      Maintenance.compactPartitions(spark, pathOf(layout, s), s.part.toSeq); ()
-    }), parallelism = stores.size)
-  }
+    WriterLease.withLease(leaseRoot(layout))(
+      Store.compact(spark, leaseRoot(layout), Stores))
 
   // the oracle replays the grown corpus as a UNION and re-derives every
   // statistic from scratch — the strongest form of the "incremental ==

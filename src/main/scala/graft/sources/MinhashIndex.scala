@@ -77,15 +77,23 @@ object MinhashIndex {
   private[graft] def bbucketCol(bandHash: Column): Column =
     pmod(xxhash64(bandHash), lit(BandBuckets.toLong))
 
-  /** Signatures + banded rows for a batch of documents — the one feature
-    * pipeline build, upsert, and delete-discovery all share (a drift
-    * between them would silently desynchronize the two stores). Bands are
-    * derived FROM the signature frame, so sigs and bands can never
-    * disagree on a doc. */
-  private def featuresOf(docs: DataFrame): (DataFrame, DataFrame) = {
-    val sigs = Dedup.minhashSignatures(docs)
-    (sigs, Dedup.lshBands(sigs))
-  }
+  /** The signature rows (doc_id, sig) as stored. */
+  private case object Signatures extends Input(None)
+
+  // primary: min-hashes are not derivable from bands, so the audit's
+  // sig_width stays a hand-written check
+  private val Sigs = Store("sigs", Some("sbucket"), appended = true)
+  // a pure function of the signatures — the one derivation build, upsert
+  // and repair share, so the two stores can never disagree on a doc; any
+  // drift means a maintenance move touched one store and not the other
+  private val Bands = Store("bands", Some("bbucket"),
+    derivation = Some(Derivation(Signatures, "bands_match_sigs", sigs =>
+      Dedup.lshBands(sigs).withColumn("bbucket", bbucketCol(col("band_hash"))))),
+    appended = true)
+  private val Stores = Seq(Sigs, Bands)
+
+  private def sigsOf(spark: SparkSession, layout: Layout): DataFrame =
+    spark.read.parquet(layout.sigsPath).select(col("doc_id"), col("sig"))
 
   /** Build the index under the shared per-SF cache if absent. */
   def ensure(spark: SparkSession, dir: String): Layout = {
@@ -99,13 +107,10 @@ object MinhashIndex {
     }
     if (!Files.exists(markerOf(base))) {
       Files.createDirectories(Paths.get(base, IndexName))
-      val (sigs, bands) = featuresOf(Tables.documents(spark, dir))
-      sigs.withColumn("sbucket", sbucketCol(col("doc_id")))
-        .repartition(col("sbucket"))
-        .write.mode("overwrite").partitionBy("sbucket").parquet(layout.sigsPath)
-      bands.withColumn("bbucket", bbucketCol(col("band_hash")))
-        .repartition(col("bbucket"))
-        .write.mode("overwrite").partitionBy("bbucket").parquet(layout.bandsPath)
+      val sigs = Dedup.minhashSignatures(Tables.documents(spark, dir))
+      Store.write(Sigs, sigs.withColumn("sbucket", sbucketCol(col("doc_id"))),
+        layout.sigsPath)
+      Store.write(Bands, Bands.derive(sigs), layout.bandsPath)
       Files.writeString(markerOf(base),
         s"""{"name": "$IndexName", "kind": "minhash-lsh", """ +
           s""""fns": ${Dedup.MinhashFns}, "bands": ${Dedup.LshBands}, """ +
@@ -162,18 +167,15 @@ object MinhashIndex {
     * can derive the batch's bucket footprint without recomputing. */
   def upsertDocs(spark: SparkSession, layout: Layout, docs: DataFrame): DataFrame =
       WriterLease.withLease(leaseRoot(layout)) {
-    val (sigs0, _) = featuresOf(docs)
-    val sigs = sigs0.localCheckpoint(eager = true) // consumed twice: store + bands
-    val bands = Dedup.lshBands(sigs)
-      .withColumn("bbucket", bbucketCol(col("band_hash")))
+    val sigs = Dedup.minhashSignatures(docs)
+      .localCheckpoint(eager = true) // consumed twice: store + bands
+    val bands = Bands.derive(sigs)
       .localCheckpoint(eager = true) // consumed twice: store + footprint
     // two disjoint store appends from checkpointed frames — overlapped
     graft.operators.Par.run(Seq(
-      () => sigs.withColumn("sbucket", sbucketCol(col("doc_id")))
-        .repartition(col("sbucket"))
-        .write.mode("append").partitionBy("sbucket").parquet(layout.sigsPath),
-      () => bands.repartition(col("bbucket"))
-        .write.mode("append").partitionBy("bbucket").parquet(layout.bandsPath)),
+      () => Store.append(leaseRoot(layout), Sigs,
+        sigs.withColumn("sbucket", sbucketCol(col("doc_id")))),
+      () => Store.append(leaseRoot(layout), Bands, bands)),
       parallelism = 2)
     bands
   }
@@ -283,18 +285,12 @@ object MinhashIndex {
       InvertedIndex.UpsertIdOffset, minEst = 0.5)
   }
 
-  /** Fold every fragmented shard of both append-only stores ­— the
-    * census-gated maintenance move ([[InvertedIndex.compactStores]]'
-    * twin for the dedup artifact). */
+  /** Fold every fragmented shard of both append-only stores — the
+    * census-gated maintenance move, run from the store declarations
+    * ([[Store.compact]]). */
   private[graft] def compactStores(spark: SparkSession, layout: Layout): Unit =
-      WriterLease.withLease(leaseRoot(layout)) {
-    // two disjoint stores under one held lease — overlapped folds (the
-    // InvertedIndex.compactStores discipline)
-    graft.operators.Par.run(Seq(
-      () => { Maintenance.compactPartitions(spark, layout.sigsPath, Seq("sbucket")); () },
-      () => { Maintenance.compactPartitions(spark, layout.bandsPath, Seq("bbucket")); () }),
-      parallelism = 2)
-  }
+    WriterLease.withLease(leaseRoot(layout))(
+      Store.compact(spark, leaseRoot(layout), Stores))
 
   /** Batch-vs-corpus near-dup lookup through the pruned stores — shared by
     * the batch and streaming upsert queries. `batchBands` is the batch's
@@ -349,45 +345,27 @@ object MinhashIndex {
 
   /** PHYSICAL-LAYER self-audit of one minhash layout — the
     * [[InvertedIndex.auditFrame]] discipline applied to the two stores:
-    *  - bands_match_sigs: the band store holds EXACTLY the rows
-    *    re-derived from the signature store (band hashes are a pure
-    *    function of sigs — any drift means a maintenance move touched one
-    *    store and not the other);
-    *  - sig_width: every signature carries [[Dedup.MinhashFns]] slots. */
+    * the band store is diffed against its declared derivation from the
+    * signatures ([[Store.audit]]: bands_match_sigs), and one hand-written
+    * check covers the primary store — sig_width: every signature carries
+    * [[Dedup.MinhashFns]] slots. */
   private[graft] def auditFrame(spark: SparkSession, layout: Layout): DataFrame = {
-    val sigs = spark.read.parquet(layout.sigsPath).select(col("doc_id"), col("sig"))
-    def row(inv: String, violations: org.apache.spark.sql.Column,
-            from: DataFrame): DataFrame =
-      from.agg(coalesce(violations, lit(0L)).as("violations"))
-        .select(lit("minhash").as("artifact"), lit(inv).as("invariant"),
-          col("violations"))
-    val bandCmp = Dedup.lshBands(sigs).withColumn("d", lit(1))
-      .join(spark.read.parquet(layout.bandsPath)
-          .select(col("doc_id"), col("band_idx"), col("band_hash"), lit(1).as("s")),
-        Seq("doc_id", "band_idx", "band_hash"), "full_outer")
-    val m1 = row("bands_match_sigs",
-      sum(when(col("d").isNull || col("s").isNull, 1L).otherwise(0L)), bandCmp)
-    val m2 = row("sig_width",
-      sum(when(size(col("sig")) =!= Dedup.MinhashFns, 1L).otherwise(0L)), sigs)
-    m1.unionByName(m2)
+    val sigs = sigsOf(spark, layout)
+    Store.audit("minhash", leaseRoot(layout), Stores, spark.read.parquet(_), _ => sigs,
+      identity)
+      .unionByName(Store.auditRow("minhash", "sig_width",
+        sum(when(size(col("sig")) =!= Dedup.MinhashFns, 1L).otherwise(0L)), sigs))
   }
 
-  /** REPAIR: re-derive the band store from the signature store — bands
-    * are a pure function of sigs ([[featuresOf]]'s invariant), so a
-    * drifted band store (the audit's bands_match_sigs) restores from one
-    * sig-store pass. Signatures are primary (min-hashes are not
-    * derivable from bands); a damaged sig store needs the corpus. */
+  /** REPAIR: re-derive the band store from the signature store through
+    * the shared declaration code ([[Store.rebuild]]) — bands are a pure
+    * function of sigs, so a drifted band store (the audit's
+    * bands_match_sigs) restores from one sig-store pass. Signatures are
+    * primary (min-hashes are not derivable from bands); a damaged sig
+    * store needs the corpus. */
   private[graft] def rebuildDerived(spark: SparkSession, layout: Layout): Unit =
-      WriterLease.withLease(leaseRoot(layout)) {
-    val sigs = spark.read.parquet(layout.sigsPath)
-      .select(col("doc_id"), col("sig"))
-    Maintenance.publishReplace(spark, layout.bandsPath) { staged =>
-      Dedup.lshBands(sigs)
-        .withColumn("bbucket", bbucketCol(col("band_hash")))
-        .repartition(col("bbucket"))
-        .write.mode("overwrite").partitionBy("bbucket").parquet(staged)
-    }
-  }
+    WriterLease.withLease(leaseRoot(layout))(
+      Store.rebuild(spark, leaseRoot(layout), Stores, _ => sigsOf(spark, layout)))
 
   /** Q-index-audit: the engine auditing its own index fleet — one query,
     * one row per (artifact, invariant) with violation counts, all zero on
@@ -500,11 +478,14 @@ object MinhashIndex {
     * keymap entry (vector — the stale-surplus shape a crash window
     * leaves), a dropped norms shard (embed16 flagship), a dropped
     * reverse-edge shard (graph), and a dropped code partition (SQ8).
-    * Every repair is a pure re-derivation from its primary: dict/lex/
-    * lens/stats/footprint/impacts/norms from postings
-    * ([[InvertedIndex.rebuildDerived]]), bands from signatures, the
-    * keymap from the data partitions, redges by re-transposing the edge
-    * store ([[graft.operators.GraphOps.rebuildRedges]]), SQ8 codes by
+    * Every repair is a pure re-derivation from its primary. The
+    * inverted, embed16 and minhash repairs run from their store
+    * declarations ([[Store.rebuild]]): dict and its key-set sidecars,
+    * lens, stats, footprint, impacts and norms from postings
+    * ([[InvertedIndex.rebuildDerived]]), bands from signatures
+    * ([[rebuildDerived]]). The keymap is rebuilt from the data
+    * partitions, redges by re-transposing the edge store
+    * ([[graft.operators.GraphOps.rebuildRedges]]), SQ8 codes by
     * re-encoding the vectors ([[graft.operators.VectorOps.rebuildSq8]]).
     * The result row per invariant carries flagged_before (did the audit
     * SEE the corruption — an audit that cannot fail is decoration) and

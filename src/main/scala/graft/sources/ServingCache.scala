@@ -229,24 +229,6 @@ object ServingCache {
   def keymap(spark: SparkSession, basePath: String, name: String): DataFrame =
     frame(spark, Paths.get(basePath, name, "keymap"))
 
-  /** Drop Spark's SHARED file-listing cache (the session-level
-    * FileStatusCache behind every path-based parquet read). The round-18
-    * churn adjudication caught the failure shape this exists for — on
-    * BASELINE code, so pre-existing, not a parallelism artifact: a
-    * reader that lists a store DURING a dynamic overwrite caches
-    * pre-overwrite file statuses, and every LATER read of that path
-    * (including the maintainer's own next operation, and a torn-read
-    * retry's re-plan) is served the poisoned listing — the retry fails
-    * on the SAME deleted file forever. Invalidate-then-replan makes the
-    * retry actually fresh; maintenance entry points call it on entry so
-    * a maintainer never consumes a listing poisoned by a concurrent
-    * reader. Cost: the next few reads re-list their directories
-    * (metadata-scale); correctness never depended on the cache
-    * (scaladoc above). */
-  def dropStaleListings(spark: SparkSession): Unit =
-    org.apache.spark.sql.execution.datasources.FileStatusCache
-      .getOrCreate(spark).invalidateAll()
-
   /** True when a failure chain bottoms out in a file deleted underneath
     * a running plan — the torn-read window's signature (a dynamic
     * overwrite, or a replace publish's delete-then-move, replaced files

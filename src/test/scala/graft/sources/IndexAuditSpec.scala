@@ -142,46 +142,158 @@ class IndexAuditSpec extends SparkSpecBase with Matchers {
     (audit - "keymap_mirrors_data").values.foreach(_ shouldBe 0L)
   }
 
+  // audit and repair of one index copy
+  private final case class Ops(audit: () => Map[String, Long], repair: () => Unit)
+
+  private def invertedOps(root: java.nio.file.Path): Ops = {
+    val l = InvertedIndex.Layout(root.resolve("data").toString,
+      root.resolve("dict").toString, root.resolve("stats").toString)
+    Ops(() => auditMap(InvertedIndex.auditFrame(spark, l)),
+      () => InvertedIndex.rebuildDerived(spark, l))
+  }
+
+  private def minhashOps(root: java.nio.file.Path): Ops = {
+    val l = MinhashIndex.Layout(root.resolve("sigs").toString,
+      root.resolve("bands").toString)
+    Ops(() => auditMap(MinhashIndex.auditFrame(spark, l)),
+      () => MinhashIndex.rebuildDerived(spark, l))
+  }
+
+  private def rootOf(layout: InvertedIndex.Layout): java.nio.file.Path = {
+    InvertedIndex.backfill(spark, layout, InvertedIndex.Impacts) // lazy at build
+    Paths.get(layout.dataPath).getParent
+  }
+
+  // one pristine clone per kind, shared by every mutation case; each case
+  // mutates its own copy of it, so cases can run as overlapped jobs
+  private lazy val wordRoot =
+    rootOf(InvertedIndex.cloneIndex(spark, sfDir, "audit-mut-word"))
+  private lazy val embedRoot = rootOf(InvertedIndex.cloneIndexNamed(spark, sfDir,
+    EmbedIndex.IndexName, "embed16", "audit-mut-embed"))
+  private lazy val mhRoot = Paths.get(
+    MinhashIndex.cloneIndex(spark, sfDir, "audit-mut-minhash").sigsPath).getParent
+
+  /** A fresh copy of the pristine clone `pristine`, named by `tag`. */
+  private def copyOf(pristine: java.nio.file.Path, tag: String): java.nio.file.Path = {
+    val root = Paths.get(s"$pristine-$tag")
+    Maintenance.deleteRecursively(root)
+    Maintenance.copyTree(pristine, root)
+    root
+  }
+
+  /** Drops one partition directory of `store` in the copy at `root` (stats
+    * has none: its one row is rewritten with a wrong n). */
+  private def drop(root: java.nio.file.Path, store: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val dir = root.resolve(store)
+    if (store == "stats") {
+      val wrong = spark.read.parquet(dir.toString)
+        .withColumn("n", col("n") + 1L).localCheckpoint(eager = true)
+      wrong.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    } else Maintenance.deleteRecursively(firstPartitionDir(dir.toString))
+  }
+
+  /** Drops one partition of `store` in the copy at `root` and asserts
+    * the audit flags exactly `flags`. */
+  private def dropFlagsExactly(root: java.nio.file.Path, ops: Ops, store: String,
+                               flags: Set[String]): Unit = {
+    drop(root, store)
+    withClue(s"${root.getFileName}/$store: ") {
+      ops.audit().filter(_._2 > 0L).keySet shouldBe flags
+    }
+  }
+
+  /** The mutation table of one kind: for each row, drop one partition of
+    * the row's store and assert exactly its flags, then restore the store
+    * from `pristine`. Repair is NOT per row: it rebuilds every derived
+    * store whichever one drifted, so one round trip from a copy with a
+    * partition of EVERY store in `derived` dropped checks it for all of
+    * them at once, and its chain order (dict before its key sets, lens
+    * before stats) as well. */
+  private def mutationTable(pristine: java.nio.file.Path,
+                            ops: java.nio.file.Path => Ops,
+                            rows: Seq[(String, Set[String])],
+                            derived: Seq[String]): Unit = {
+    val root = copyOf(pristine, "table")
+    rows.foreach { case (store, flags) =>
+      dropFlagsExactly(root, ops(root), store, flags)
+      Maintenance.deleteRecursively(root.resolve(store))
+      Maintenance.copyTree(pristine.resolve(store), root.resolve(store))
+    }
+    derived.foreach(drop(root, _))
+    ops(root).repair()
+    withClue(s"${root.getFileName} after repair: ") {
+      ops(root).audit().values.foreach(_ shouldBe 0L)
+    }
+    Maintenance.deleteRecursively(root)
+  }
+
+  private val WordDerived = Seq("dict", "dictlex", "dictrev", "dictdel", "lens",
+    "stats", "footprint", "impacts")
+  private val EmbedDerived = Seq("dict", "lens", "stats", "footprint",
+    "impacts", "norms")
+
   test("a planted dict corruption flags dict_df_matches_postings AND the lex sync") {
-    val layout = InvertedIndex.cloneIndex(spark, sfDir, "audit-dict")
-    Maintenance.deleteRecursively(firstPartitionDir(layout.dictPath))
-    val audit = auditMap(InvertedIndex.auditFrame(spark, layout))
-    audit("dict_df_matches_postings") should be > 0L
     // the lex, deletion-neighborhood, and reversed-term sidecars still
     // hold the dropped bucket's keys — one planting, four invariants see
     // it (each from its own store pair)
-    audit("lex_matches_dict") should be > 0L
-    audit("del_matches_dict") should be > 0L
-    audit("rev_matches_dict") should be > 0L
-    (audit - "dict_df_matches_postings" - "lex_matches_dict" -
-      "del_matches_dict" - "rev_matches_dict").values.foreach(_ shouldBe 0L)
+    val root = copyOf(wordRoot, "dict")
+    dropFlagsExactly(root, invertedOps(root), "dict", Set("dict_df_matches_postings",
+      "lex_matches_dict", "del_matches_dict", "rev_matches_dict"))
   }
 
   test("a planted dictrev-shard drop flags exactly rev_matches_dict") {
-    val layout = InvertedIndex.cloneIndex(spark, sfDir, "audit-rev")
-    val revRoot = Paths.get(layout.dictPath).getParent.resolve("dictrev")
-    Maintenance.deleteRecursively(firstPartitionDir(revRoot.toString))
-    val audit = auditMap(InvertedIndex.auditFrame(spark, layout))
-    audit("rev_matches_dict") should be > 0L
-    (audit - "rev_matches_dict").values.foreach(_ shouldBe 0L)
+    val root = copyOf(wordRoot, "dictrev")
+    dropFlagsExactly(root, invertedOps(root), "dictrev", Set("rev_matches_dict"))
   }
 
   test("a planted dictdel-shard drop flags exactly del_matches_dict") {
-    val layout = InvertedIndex.cloneIndex(spark, sfDir, "audit-del")
-    val delRoot = Paths.get(layout.dictPath).getParent.resolve("dictdel")
-    Maintenance.deleteRecursively(firstPartitionDir(delRoot.toString))
-    val audit = auditMap(InvertedIndex.auditFrame(spark, layout))
-    audit("del_matches_dict") should be > 0L
-    (audit - "del_matches_dict").values.foreach(_ shouldBe 0L)
+    val root = copyOf(wordRoot, "dictdel")
+    dropFlagsExactly(root, invertedOps(root), "dictdel", Set("del_matches_dict"))
   }
 
   test("a planted lex-shard drop flags exactly lex_matches_dict") {
-    val layout = InvertedIndex.cloneIndex(spark, sfDir, "audit-lex")
-    val lexRoot = Paths.get(layout.dictPath).getParent.resolve("dictlex")
-    Maintenance.deleteRecursively(firstPartitionDir(lexRoot.toString))
+    val root = copyOf(wordRoot, "dictlex")
+    dropFlagsExactly(root, invertedOps(root), "dictlex", Set("lex_matches_dict"))
+  }
+
+  test("a planted band-store drift flags exactly bands_match_sigs") {
+    val root = copyOf(mhRoot, "bands")
+    dropFlagsExactly(root, minhashOps(root), "bands", Set("bands_match_sigs"))
+  }
+
+  test("a dropped derived store flags exactly its invariants") {
+    // the rows the named cases above do not cover: the store, and the
+    // invariants dropping one of its partitions must flag — its own, plus
+    // those of the stores derived from it (stats from lens); then one
+    // repair round trip per kind over every derived store
+    val word = Seq(
+      "lens" -> Set("lens_matches_postings", "stats_match_lens"),
+      "stats" -> Set("stats_match_lens"),
+      "footprint" -> Set("footprint_matches_postings"),
+      "impacts" -> Set("impacts_bound_postings"))
+    val embed = Seq(
+      "dict" -> Set("dict_df_matches_postings"),
+      "lens" -> Set("lens_matches_postings", "stats_match_lens"),
+      "stats" -> Set("stats_match_lens"),
+      "footprint" -> Set("footprint_matches_postings"),
+      "impacts" -> Set("impacts_bound_postings"),
+      "norms" -> Set("norms_match_postings"))
+    graft.operators.Par.run(Seq(
+      () => mutationTable(wordRoot, invertedOps, word, WordDerived),
+      () => mutationTable(embedRoot, invertedOps, embed, EmbedDerived),
+      () => mutationTable(mhRoot, minhashOps, Nil, Seq("bands"))),
+      parallelism = 3)
+  }
+
+  test("pending deletes violate no deep-audit invariant") {
+    import spark.implicits._
+    val layout = InvertedIndex.cloneIndex(spark, sfDir, "audit-pending")
+    // tombstones only: stats drop at once, lens keeps the rows to vacuum
+    InvertedIndex.deleteDocs(spark, layout, Seq(1L, 2L, 3L).toDF("doc_id"))
     val audit = auditMap(InvertedIndex.auditFrame(spark, layout))
-    audit("lex_matches_dict") should be > 0L
-    (audit - "lex_matches_dict").values.foreach(_ shouldBe 0L)
+    audit should have size 9
+    audit.values.foreach(_ shouldBe 0L)
   }
 
   test("a planted positional truncation flags exactly positions_match_tf") {
@@ -246,13 +358,5 @@ class IndexAuditSpec extends SparkSpecBase with Matchers {
         }
       }
     }
-  }
-
-  test("a planted band-store drift flags exactly bands_match_sigs") {
-    val layout = MinhashIndex.cloneIndex(spark, sfDir, "audit-bands")
-    Maintenance.deleteRecursively(firstPartitionDir(layout.bandsPath))
-    val audit = auditMap(MinhashIndex.auditFrame(spark, layout))
-    audit("bands_match_sigs") should be > 0L
-    audit("sig_width") shouldBe 0L
   }
 }

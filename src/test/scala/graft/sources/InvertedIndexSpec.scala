@@ -399,7 +399,7 @@ class InvertedIndexSpec extends SparkSpecBase with Matchers {
     import InvertedIndex.{DictDel, DictLex, DictRev, Footprint, Impacts, Lens}
     val fresh = InvertedIndex.cloneIndex(spark, sfDir, "bm25-backfill")
     val freshRoot = Paths.get(fresh.dataPath).getParent
-    def stored(s: InvertedIndex.Store) =
+    def stored(s: Store) =
       spark.read.parquet(freshRoot.resolve(s.dir).toString)
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
